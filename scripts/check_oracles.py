@@ -1,7 +1,8 @@
 """Local stand-in for the driver's correctness gate: run every
 queries() entry and its oracle_sql() through DuckDB at the given SF,
 compare row count, sorted-column schema, and order-insensitive
-value hash."""
+value hash. A query that leaves the session SQL conf changed (a
+toggle it did not restore) fails too."""
 
 import hashlib
 import sys
@@ -38,6 +39,17 @@ def value_hash(rows, cols):
     return hashlib.md5("\n".join(lines).encode()).hexdigest()
 
 
+def session_conf(spark):
+    return {r[0]: r[1] for r in spark.sql("SET").collect()}
+
+
+def conf_leak(before, after):
+    """{key: (before, after)} for every conf the query left changed."""
+    return {k: (before.get(k), after.get(k))
+            for k in before.keys() | after.keys()
+            if before.get(k) != after.get(k)}
+
+
 def main():
     spark = get_spark(cores=8, shuffle_partitions=8)
     con = duckdb.connect()
@@ -51,6 +63,7 @@ def main():
         if ONLY and name not in ONLY:
             continue
         t0 = time.time()
+        conf_before = session_conf(spark)
         try:
             sdf = fn(spark, SF_DIR)
             scols = sorted(sdf.columns)
@@ -59,6 +72,11 @@ def main():
             failures.append((name, f"SPARK ERROR {type(e).__name__}: {e}"))
             print(f"{name:24s} SPARK ERROR: {str(e)[:200]}", flush=True)
             continue
+        finally:
+            leak = conf_leak(conf_before, session_conf(spark))
+            if leak:
+                failures.append((name, f"CONF LEAK {leak}"))
+                print(f"{name:24s} CONF LEAK: {leak}", flush=True)
         t1 = time.time()
         if name not in oracles:
             print(f"{name:24s} rows={len(srows):6d} (rows-only, no oracle) "

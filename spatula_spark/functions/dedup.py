@@ -247,6 +247,11 @@ def _capped_bucket_pairs(
     Returns columns ``(_a, _b[, _pa, _pb])`` — ids and, when
     ``payload_c`` is given, the payload (fingerprint) of each side.
     Bucket-min hubs guarantee ``_a < _b``.
+
+    Precondition: ``key_cols`` are non-null. The bucket-size aggregate
+    joins back on them with a null-rejecting equi-join, so a row with
+    a null bucket key is dropped (every caller's keys are md5- or
+    literal-derived, never null).
     """
     pay = [payload_c] if payload_c else []
     hub_struct = F.struct(
@@ -508,6 +513,10 @@ def incremental_near_dups(
     near-identical bucket verifies like any other); the reported
     ``base_id`` may shift from the global best to the representative,
     which is why the gate-scale battery query runs uncapped.
+
+    Precondition: the ``(band, bsig)`` bucket keys are non-null (they
+    are literal/md5-derived); the cap's bucket-size aggregate joins
+    back on them with a null-rejecting equi-join.
     ``stats`` (opt-in) is filled with the same cap telemetry as
     :func:`_capped_bucket_pairs`.
     """
@@ -621,7 +630,12 @@ def containment_pairs(
     is asymmetric): ``(doc_a, doc_b, containment)`` = share of doc_a's
     pruned shingles that also occur in doc_b, ≥ ``threshold``,
     doc_a ≠ doc_b, rounded to 6 places (integer-count division —
-    bit-identical cross-engine)."""
+    bit-identical cross-engine).
+
+    Runs EAGERLY: the pruned postings are ``localCheckpoint``-ed at
+    call time (Spark jobs run before this returns; the checkpoint lives
+    on the current executors), so even plan-only callers (explain,
+    plan dumps) trigger that computation."""
     posts = (
         _spread(df)
         .select(
@@ -1067,7 +1081,11 @@ def _mih_near_dups(
     bucket therefore meet only the hub (the lossy, documented trade:
     an outside probe within radius of a member but not hub-connected
     through any other small bucket is dropped — telemetry via
-    ``stats``)."""
+    ``stats``).
+
+    Precondition: ``hash_col`` is non-null; the cap's bucket-size
+    aggregate joins back on the (block, key) buckets derived from it
+    with a null-rejecting equi-join, so a null hash drops its row."""
     q = max_hamming // 4
     masks = [0]
     masks += [1 << j for j in range(16)]

@@ -75,11 +75,15 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from dataclasses import dataclass
+import sys
+import tempfile
+import time
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass, field
 from typing import Any, Callable
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schemas
@@ -87,6 +91,7 @@ from . import native as N
 from ..operators import politeness as politeness_ops
 from ..operators import seen as seen_ops
 from ..operators.parsers import UnsupportedDocumentError
+from ..session import scoped_conf
 from ..urls import canonicalize_url, host_of, url_hash
 from .pagespec import (
     ChildPage,
@@ -105,38 +110,23 @@ from .pagespec import (
 
 # Ceiling on payload rows per wave-coalesce partition. The wave
 # snapshot's coalesce() collapses the fetch+decode+write stage to
-# _wave_parts tasks, so this — not the core count — is what bounds
-# per-task Arrow/python/parquet memory on payload-bearing waves.
+# the wave's partition count, so this — not the core count — is what
+# bounds per-task Arrow/python/parquet memory on payload-bearing waves.
 _WAVE_ROWS_PER_PART = 1 << 16
 
-_EMISSION_OUT_SCHEMA = (
-    "emit_kind string, src_cls string, path string, item_json string, "
-    "child_cls string, child_url string, child_input_json string, "
-    "priority int, page_seq int, attempts int, error string, "
-    "url_hash long, seen_key long"
-)
+# seen-set Bloom tier: shard count and target FPR at design capacity
+# (per-shard capacity is CrawlConfig.bloom_shard_capacity); the filter
+# re-shards 4x wider once inserted keys pass that capacity
+_BLOOM_SHARDS = 16
+_BLOOM_FPR = 1e-3
+# per-host salt width of the real-HTTP fetch's repartition
+_SALT_BUCKETS = 8
 
-_EMISSION_COLS = [
-    "emit_kind", "src_cls", "path", "item_json", "child_cls", "child_url",
-    "child_input_json", "priority", "page_seq", "attempts", "error",
-    "url_hash", "seen_key",
-]
-
-# fetched-row schema for driver-built missing (404) rows — must match
-# the _fetch out_cols projection column-for-column
-_FETCHED_LOCAL_SCHEMA = (
-    "page_cls string, path string, url string, input_json string, "
-    "payload binary, links array<string>, next_url string, status int, "
-    "attempts int, page_seq int, payload_kind string, image_id string, "
-    "found boolean, priority int, flaky_rejects int, "
-    "url_hash bigint, seen_key bigint"
-)
-
-_BATCH_SELECT = [
-    "page_cls", "path", "url", "input_json", "payload", "links", "next_url",
-    "status", "attempts", "page_seq", "payload_kind", "image_id", "found",
-    "priority", "flaky_rejects", "url_hash", "seen_key",
-]
+_EMISSION_OUT_SCHEMA = ", ".join(f"{n} {t}" for n, t in N.EMISSION_FIELDS)
+_EMISSION_COLS = [n for n, _ in N.EMISSION_FIELDS]
+_EMIT_KINDS = ("item", "child", "next", "requeue", "skip_item",
+               "skip_page", "handled_error", "error", "reject",
+               "fetched", "blocked", "deferred")
 
 
 class CrawlError(Exception):
@@ -146,31 +136,18 @@ class CrawlError(Exception):
 @dataclass
 class CrawlConfig:
     max_waves: int | None = None
-    follow_children: bool = True
-    scout: bool = False
     # politeness: per-wave per-host budget; None disables (reference's
     # global --rpm generalized per-host, cli.py:33)
     host_budget_per_wave: int | None = None
-    dedup_urls: bool = True
     use_bloom: bool = True
-    bloom_fpr: float = 1e-3
-    bloom_shards: int = 16
-    # auto-regrow the sharded bloom when inserted keys exceed this
-    # fraction of designed capacity (seen.ShardedBloom.regrow)
-    bloom_regrow_fill: float = 1.0
     # fixed per-shard capacity (blob size is set once; OR-merge keeps
     # it constant). 256k hashes/shard ≈ 460 KB/shard at fpr 1e-3; a
-    # 10^10-URL deployment raises shards+capacity (docs in seen.py).
+    # 10^10-URL deployment raises capacity (docs in seen.py).
     bloom_shard_capacity: int = 1 << 18
     # below this many seen URLs the broadcast-bloom prefilter costs
     # more than the plain anti-join it saves (measured: the per-wave
     # blob broadcast + python UDF outweigh a sub-100k-row anti-join)
     bloom_min_seen: int = 100_000
-    # bloom_exact_confirm=True: bloom is a prefilter, the exact
-    # anti-join confirms "maybe seen" rows (parity mode — zero false
-    # drops). False: bloom-only (scale mode; FPR-bounded URL loss).
-    bloom_exact_confirm: bool = True
-    salt_buckets: int = 8
     fail_fast: bool = True
     checkpoint_dir: str | None = None
     # real-Iceberg snapshot backend: "catalog.namespace.name" table
@@ -224,14 +201,10 @@ class CrawlConfig:
     resume_upto_wave: int | None = None
     target_partitions: int | None = None  # defaults to shuffle partitions
     verbose: bool = False  # per-wave step timings to stderr
-    # per-wave materialization. "parquet" writes each wave's frontier/
-    # seen/emissions to a scratch dir and re-reads them — a *reliable*
-    # lineage cut (measured: flat ~1.3s/wave vs exponential growth with
-    # localCheckpoint on Spark 4.1, see BENCH notes); it is also
-    # exactly the Iceberg-snapshot-per-wave write pattern the north
-    # rule mandates. "local" keeps localCheckpoint (in-memory blocks).
-    materialize: str = "parquet"
-    spill_dir: str | None = None  # default: mkdtemp, removed on success
+    # scratch dir of the per-wave parquet lineage cuts (default: a fresh
+    # mkdtemp per crawl). The caller owns it: the lazy CrawlResult
+    # DataFrames read from it, so the engine never removes it.
+    spill_dir: str | None = None
     # small-wave driver materialization: when the fan-out-aware size
     # estimate (max of this wave's frontier and the previous wave's
     # total emissions) is at or below this, the wave's slim emission
@@ -262,22 +235,6 @@ class CrawlConfig:
     # store copy instead (frontier side is wave-sized; the store side
     # reuses its bucketing, key column pruned)
     broadcast_store_keys_max: int = 4_000_000
-    # driver-side store keyset (fast-path 404 detection): at or below
-    # this many store rows the url_hash set is collected ONCE (~80 B/
-    # key in a Python set) and small-wave found/missing splits happen
-    # in Python — no per-wave store-keys broadcast job at all. Bigger
-    # stores keep the in-plan anti-join. None (default) derives the
-    # cap from the provisioned driver heap — 5% at ~80 B/key (~650k
-    # at Spark's stock 1 GiB, ~16M at 24 GiB) — so a larger deployment
-    # widens the fast path instead of inheriting a laptop literal.
-    driver_store_keys_max: int | None = None
-    # cap on the driver-resident seen-set twin (~100-150 B/key in a
-    # Python set): beyond this the twin is dropped and cluster dedup
-    # owns the rest of the crawl. Deep chains add O(1) keys/wave and
-    # never approach it; breadth-heavy crawls lose the twin early via
-    # driver_wave_max anyway. None (default) derives from the driver
-    # heap like driver_store_keys_max (5% at ~130 B/key).
-    driver_seen_max: int | None = None
 
 
 _MEM_SUFFIX = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
@@ -323,6 +280,76 @@ class CrawlResult:
     def items(self) -> list[Any]:
         """Driver-side ordered item values (test/parity helper)."""
         return [json.loads(r["item_json"]) for r in self.ordered().collect()]
+
+
+@dataclass
+class _CrawlState:
+    """What one ``crawl()`` call owns, handed to its phase methods —
+    no per-crawl state lives on the engine."""
+
+    spill: str  # scratch dir of the wave lineage cuts
+    scout: bool  # scout projection; children not followed
+    frontier: DataFrame
+    # seed lists are built with attempts=0; DataFrame seeds or a resume
+    # may carry in-flight requeues, so the dedup splits them off. Later
+    # waves know from the previous wave's requeue/deferred tallies.
+    requeues_possible: bool
+    # driver-resident twin of the seen set (exact (url_hash, seen_key)
+    # pairs) — alive while every wave's new keys were small enough to
+    # land on the driver; enables the zero-shuffle small-wave dedup.
+    # Killed (None) the moment a wave outgrows it; cluster dedup takes
+    # over seamlessly.
+    py_seen: set[tuple[int, int]] | None
+    bloom: seen_ops.ShardedBloom | None
+    ice: Any = None  # IcebergSnapshots when iceberg_table_prefix is set
+    wave: int = 0
+    start_wave: int = 0
+    tick_at: float = 0.0  # last verbose stamp
+    spill_n: int = 0
+    seen_slices: list[DataFrame] = field(default_factory=list)
+    seen_count: int = 0
+    # previous wave's frontier rows when that wave landed on the driver
+    # (tuples in FRONTIER_SCHEMA order)
+    frontier_rows: list[tuple] | None = None
+    # previous wave's total emission count: the fan-out-aware estimate
+    # of this wave's output (None before the first wave)
+    prev_emissions: int | None = None
+    results: list[DataFrame] = field(default_factory=list)
+    dead: list[DataFrame] = field(default_factory=list)
+    metrics_rows: list[dict] = field(default_factory=list)
+    # item/seen deltas since the last durable checkpoint, and the
+    # in-flight async commit
+    ckpt_items: list[DataFrame] = field(default_factory=list)
+    ckpt_seen: list[DataFrame] = field(default_factory=list)
+    ckpt_future: Any = None
+    ckpt_pool: ThreadPoolExecutor | None = None
+
+
+@dataclass
+class _Wave:
+    """One wave's working set, passed from phase to phase."""
+
+    n_frontier: int  # rows entering the wave (sizes the fetch join)
+    est: int  # fan-out-aware size of the wave's output
+    parts: int  # coalesce width of a cluster-landed wave
+    local: bool = False  # scheduled by the driver-side dedup
+    rows: list[tuple] = field(default_factory=list)  # local: to fetch
+    null_rows: list[tuple] = field(default_factory=list)  # local: no URL
+    fetchable: DataFrame | None = None  # cluster: deduped rows to fetch
+    nullsrc: DataFrame | None = None  # cluster: rows with no URL
+    blocked: DataFrame | None = None  # robots-disallowed rows
+    deferred: DataFrame | None = None  # rows over the politeness budget
+    emissions: DataFrame | None = None
+    lrows: list | None = None  # emission rows landed on the driver
+    counts: dict[str, int] = field(default_factory=dict)
+    n_next: int = 0  # next frontier's row count
+    new_seen: DataFrame | None = None
+    items: DataFrame | None = None
+
+    @property
+    def noop(self) -> bool:
+        """Driver-side dedup found every candidate already seen."""
+        return self.local and not self.rows and not self.null_rows
 
 
 def _hex_path(parent: str, slot: str, idx: int) -> str:
@@ -675,21 +702,18 @@ class CrawlEngine:
             self._bcast_fetch_max = _broadcast_rows_budget(spark)
         else:
             self._bcast_fetch_max = self.config.broadcast_fetch_max
-        # driver-python-structure caps: derive from the provisioned
-        # driver heap when left at None (the literals-don't-scale
-        # amber from round 4) — a python set key costs ~80 B (ints) to
-        # ~130 B (with overhead), and 5% of heap is a safe residency
-        # budget beside py4j + result buffers
-        self._driver_store_keys_max = (
-            self.config.driver_store_keys_max
-            if self.config.driver_store_keys_max is not None
-            else _broadcast_rows_budget(spark, frac=0.05, row_bytes=80)
-        )
-        self._driver_seen_max = (
-            self.config.driver_seen_max
-            if self.config.driver_seen_max is not None
-            else _broadcast_rows_budget(spark, frac=0.05, row_bytes=130)
-        )
+        # driver-python-structure caps, derived from the provisioned
+        # driver heap (a fixed literal would not scale with it): the
+        # store keyset enables the fast-path 404 split, the seen-set
+        # twin the zero-shuffle small-wave dedup (past its cap the
+        # twin is dropped and cluster dedup owns the rest of the
+        # crawl). A python set key costs ~80 B (ints) to ~130 B (with
+        # overhead), and 5% of heap is a safe residency budget beside
+        # py4j + result buffers
+        self._driver_store_keys_max = _broadcast_rows_budget(
+            spark, frac=0.05, row_bytes=80)
+        self._driver_seen_max = _broadcast_rows_budget(
+            spark, frac=0.05, row_bytes=130)
         # lazily-built wave-invariant Column caches (see crawl() —
         # rebuilding expression trees every wave is driver-bound)
         self._dedup_agg = None
@@ -745,66 +769,115 @@ class CrawlEngine:
 
     # ------------------------------------------------------------ materialize
     def _materialize(
-        self, df: DataFrame, label: str, obs_exprs: list | None = None
+        self, st: _CrawlState, df: DataFrame, label: str,
+        obs_exprs: list | None = None,
     ):
         """Cut lineage + compute once at a wave boundary (SURVEY §4:
-        the iterative-loop pitfall). Parquet spill by default — an
-        Iceberg deployment makes this the snapshot commit.
+        the iterative-loop pitfall). Parquet spill — an Iceberg
+        deployment makes this the snapshot commit.
 
         ``obs_exprs``: optional aggregate expressions piggybacked on the
         materialization job via ``Observation`` — row counts and
         emission-kind tallies come for free instead of costing an extra
         job each per wave."""
-        from pyspark.sql import Observation
-
+        # a reliable lineage cut: flat ~1.3s/wave where localCheckpoint
+        # grew exponentially on Spark 4.1 (see BENCH notes)
         obs = None
         if obs_exprs:
             obs = Observation()
             df = df.observe(obs, *obs_exprs)
-        if self.config.materialize == "local":
-            out = df.coalesce(self._nparts).localCheckpoint(eager=True)
-        else:
-            self._spill_n += 1
-            path = os.path.join(self._spill, f"{self._spill_n:05d}_{label}")
-            df.write.mode("overwrite").parquet(path)
-            out = self.spark.read.parquet(path)
-        return (out, obs.get) if obs_exprs else (out, None)
+        st.spill_n += 1
+        path = os.path.join(st.spill, f"{st.spill_n:05d}_{label}")
+        df.write.mode("overwrite").parquet(path)
+        out = self.spark.read.parquet(path)
+        return out, (obs.get if obs is not None else None)
+
+    def _local_df(self, rows: list, schema) -> DataFrame:
+        """Driver rows as a ONE-partition LocalRelation."""
+        # plain createDataFrame parallelizes to defaultParallelism
+        # slices, and per-wave unions then compound task counts
+        # geometrically (measured 161 → 417 tasks/stage by wave 12 of a
+        # tree crawl)
+        return self.spark.createDataFrame(
+            self.spark.sparkContext.parallelize(rows, 1), schema=schema)
 
     # ------------------------------------------------------------ seen union
-    def _seen_union(self) -> DataFrame:
+    def _seen_union(self, st: _CrawlState) -> DataFrame:
         """The accumulated seen set as ONE DataFrame, compacting slices
         lazily: deep crawls that dedup driver-side never pay the
         compaction materialization; the first wave that actually needs
         the cluster-side table (dedup anti-join, bloom backfill/regrow)
         triggers it."""
-        if len(self._seen_slices) > 8:
+        if len(st.seen_slices) > 8:
             u, _ = self._materialize(
-                _union_tree(self._seen_slices).coalesce(self._nparts),
+                st, _union_tree(st.seen_slices).coalesce(self._nparts),
                 "seen_compact",
             )
-            self._seen_slices = [u]
-        if not self._seen_slices:
+            st.seen_slices = [u]
+        if not st.seen_slices:
             return self.spark.createDataFrame(
                 [], "url_hash long, seen_key long")
-        return _union_tree(self._seen_slices)
+        return _union_tree(st.seen_slices)
 
     # ---------------------------------------------------------------- crawl
-    def crawl(self, seeds: list[dict] | DataFrame) -> CrawlResult:
+    def crawl(
+        self, seeds: list[dict] | DataFrame, _scout: bool = False
+    ) -> CrawlResult:
+        """Run waves until the frontier drains (or ``max_waves``). A
+        wave is the phase sequence size → schedule → fetch → emit →
+        land → record → seen-update → next-frontier → commit. Small
+        waves run schedule..land on the driver (Python dedup over a
+        LocalRelation frontier, emissions collected); big waves on the
+        cluster (dedup shuffle, fetch join, one parquet snapshot with
+        an Observation). ``_scout`` (see :meth:`scout`) projects results
+        scout-style and follows no children."""
         cfg = self.config
-        spark = self.spark
-        import tempfile
+        st = self._begin(seeds, _scout)
+        plan = _WavePlan(self, _scout)
+        n_frontier: int | None = None  # None = unknown (seeds / resume)
+        while True:
+            st.tick_at = time.time()
+            w = self._size(st, n_frontier)
+            if w.n_frontier == 0:
+                break
+            self._tick(st, "count")
+            if (cfg.max_waves is not None
+                    and st.wave >= cfg.max_waves + st.start_wave):
+                break
+            self._schedule(st, plan, w)
+            emissions = (
+                None if w.noop
+                else self._emit(plan, w, self._fetch_wave(plan, w))
+            )
+            self._land(st, plan, w, emissions)
+            self._tick(st, "emissions ckpt")
+            self._record(st, w)
+            self._update_seen(st, w)
+            self._tick(st, "seen update")
+            n_frontier = self._next_frontier(st, plan, w)
+            self._tick(st, "frontier derive")
+            self._commit(st, w)
+            st.wave += 1
+        return self._finish(st)
 
-        self._spill_n = 0
-        self._spill = cfg.spill_dir or tempfile.mkdtemp(prefix="spatula_spill_")
-        os.makedirs(self._spill, exist_ok=True)
-        self._seen_slices: list[DataFrame] = []
-        self._ckpt_items: list[DataFrame] = []
-        self._ckpt_seen: list[DataFrame] = []
-        self._ckpt_future = None
-        self._ckpt_pool = None
-        # seed lists are built with attempts=0; DataFrame seeds or a
-        # resume may carry in-flight requeues — be conservative there
-        self._requeues_possible = isinstance(seeds, DataFrame)
+    def _tick(self, st: _CrawlState, label: str) -> None:
+        """``verbose`` phase stamp on stderr: seconds since the last
+        stamp, plus an absolute epoch stamp so two concurrent crawls'
+        step streams can be aligned on one wall clock."""
+        if self.config.verbose:
+            now = time.time()
+            print(f"  [wave {st.wave}] {label}: {now - st.tick_at:.2f}s"
+                  f" @{now:.2f}", file=sys.stderr, flush=True)
+            st.tick_at = now
+
+    def _begin(self, seeds: list[dict] | DataFrame,
+               scout: bool) -> _CrawlState:
+        """Per-crawl state: scratch dir, wave-0 frontier and seen tiers,
+        or the latest committed snapshot when one exists."""
+        cfg = self.config
+        spill = cfg.spill_dir or tempfile.mkdtemp(prefix="spatula_spill_")
+        os.makedirs(spill, exist_ok=True)
+        self._spill = spill  # the latest crawl's, for callers' cleanup
         frontier = (
             seeds if isinstance(seeds, DataFrame) else self.seed_frontier(seeds)
         )
@@ -812,45 +885,17 @@ class CrawlEngine:
             # caller-supplied frontiers may predate hash-at-emission
             if c not in frontier.columns:
                 frontier = frontier.withColumn(c, F.lit(None).cast("long"))
-        self._seen_count = 0
-        # driver-resident twin of the seen set (exact (url_hash,
-        # seen_key) pairs) — alive while every wave's new keys were
-        # small enough to land on the driver; enables the zero-shuffle
-        # small-wave dedup. Killed (None) the moment a wave's key count
-        # exceeds driver_wave_max; cluster dedup takes over seamlessly.
-        self._py_seen: set[tuple[int, int]] | None = (
-            set() if cfg.driver_wave_max else None
+        st = _CrawlState(
+            spill=spill, scout=scout, frontier=frontier,
+            requeues_possible=isinstance(seeds, DataFrame),
+            py_seen=set() if cfg.driver_wave_max else None,
+            bloom=seen_ops.ShardedBloom(
+                _BLOOM_SHARDS, cfg.bloom_shard_capacity, _BLOOM_FPR
+            ) if cfg.use_bloom else None,
         )
-        # previous wave's frontier rows when that wave was
-        # driver-materialized (tuples in FRONTIER_SCHEMA order)
-        self._frontier_rows: list[tuple] | None = None
-        self._frontier_is_local = False
-        self._bloom = (
-            seen_ops.ShardedBloom(
-                cfg.bloom_shards, cfg.bloom_shard_capacity, cfg.bloom_fpr
-            )
-            if cfg.use_bloom
-            else None
-        )
-        results: list[DataFrame] = []
-        dead: list[DataFrame] = []
-        metrics_rows: list[dict] = []
-        dep_values = self._resolve_dependencies()
-        specs = self.registry.specs()
-        hook_cls = [
-            n for n, s in specs.items() if s.native_emit_array is None
-        ]
-        native_cls = [
-            n for n, s in specs.items() if s.native_emit_array is not None
-        ]
-        transform = _make_transform(specs, dep_values)
-
-        wave = 0
-        start_wave = 0
         # real-Iceberg snapshot backend (explicit opt-in; requires a
         # configured catalog + runtime jar — see plans/iceberg.py).
         # Same commit/resume contract as the parquet-manifest analogue.
-        self._ice = None
         if cfg.iceberg_table_prefix:
             from .iceberg import IcebergSnapshots, iceberg_available
 
@@ -862,669 +907,409 @@ class CrawlEngine:
                     "SparkCatalog and the iceberg-spark-runtime jar); "
                     "use checkpoint_dir for the parquet-manifest analogue"
                 )
-            self._ice = IcebergSnapshots(self.spark, cfg.iceberg_table_prefix)
-        if cfg.checkpoint_dir or self._ice is not None:
-            resumed = (
-                self._ice.try_resume(cfg.resume_upto_wave)
-                if self._ice is not None
-                else self._try_resume(cfg.checkpoint_dir)
+            st.ice = IcebergSnapshots(self.spark, cfg.iceberg_table_prefix)
+        if st.ice is not None:
+            resumed = st.ice.try_resume(cfg.resume_upto_wave)
+        elif cfg.checkpoint_dir:
+            resumed = self._try_resume(cfg.checkpoint_dir)
+        else:
+            resumed = None
+        if resumed is None:
+            return st
+        st.frontier, rseen, st.results, st.metrics_rows, st.wave = resumed
+        st.start_wave = st.wave
+        st.requeues_possible = True  # in-flight retries unknown
+        st.py_seen = None  # unknown provenance; cluster dedup
+        st.seen_count = rseen.count()
+        if st.seen_count:
+            rseen, _ = self._materialize(st, rseen, "seen_resume")
+            st.seen_slices.append(rseen)
+            if st.bloom is not None:
+                # one-time rebuild from the checkpointed seen table
+                st.bloom.add_hashes_df(rseen, key_col="seen_key")
+        return st
+
+    def _size(self, st: _CrawlState, n_frontier: int | None) -> _Wave:
+        """Phase size: the frontier's row count and coalesce width."""
+        # one count job on the first wave and after a resume; later
+        # waves take it from the previous wave's tallies.
+        # Tiny waves at full fan-out pay per-task/per-file overhead for
+        # nothing (measured 2x on deep chains); big waves keep full
+        # width. AQE handles the shuffles; this governs the coalesce +
+        # snapshot file counts. The width follows the wave's likely
+        # OUTPUT, not its input: a wave of list pages explodes
+        # ~fan-out× emissions (1994 seeds -> 2M children), and sizing
+        # by input once collapsed that whole explode+write into 8 tasks
+        # — a core-count-independent serial floor. The previous wave's
+        # total emission count is the fan-out-aware estimator; wave 0
+        # (no history) keeps full width.
+        if n_frontier is None:
+            n_frontier = st.frontier.count()
+        est = max(n_frontier, st.prev_emissions or 0)
+        parts = self._nparts
+        if self.config.target_partitions is None and st.prev_emissions:
+            # cap at 2x the session width: big waves keep extra
+            # partitions so per-row cost variance (image decode)
+            # amortizes instead of straggling the stage tail.
+            # The payload-row ceiling is the scale guard: the wave
+            # coalesce collapses the whole fetch+decode+write stage
+            # to this width, so a 2x-cores cap alone puts est/(2N)
+            # payload rows in ONE task — 250k rows/task at N=4 on a
+            # 2M-row wave, and multi-GB tasks on a 10^10-row
+            # frontier regardless of cluster width. Partition count
+            # must track DATA size once waves outgrow the session
+            # width: ~64k payload rows per task keeps Arrow batches,
+            # python worker residency, and parquet writer buffers
+            # flat at any frontier size.
+            parts = max(
+                8 if self._nparts >= 8 else self._nparts,
+                min(self._nparts * 2, est // 5000 + 1),
+                min(est // _WAVE_ROWS_PER_PART + 1, 16384),
             )
-            if resumed is not None:
-                frontier, rseen, results, metrics_rows, start_wave = resumed
-                wave = start_wave
-                self._requeues_possible = True  # in-flight retries unknown
-                self._py_seen = None  # unknown provenance; cluster dedup
-                self._seen_count = rseen.count()
-                if self._seen_count:
-                    rseen, _ = self._materialize(rseen, "seen_resume")
-                    self._seen_slices.append(rseen)
-                if self._bloom is not None and self._seen_count:
-                    # one-time rebuild from the checkpointed seen table
-                    self._bloom.add_hashes_df(rseen, key_col="seen_key")
+        return _Wave(n_frontier=n_frontier, est=est, parts=parts)
 
-        import sys
-        import time as _time
-
-        def _tick(label: str, t: list) -> None:
-            if cfg.verbose:
-                now = _time.time()
-                # absolute epoch stamp so two concurrent legs' step
-                # streams can be aligned on one wall clock (the
-                # overlap-window scaling analysis needs it)
-                print(f"  [wave {wave}] {label}: {now - t[0]:.2f}s"
-                      f" @{now:.2f}",
-                      file=sys.stderr, flush=True)
-                t[0] = now
-
-        # ------------- wave-invariant expression cache -------------
-        # pyspark Column objects are DataFrame-independent expression
-        # trees, but BUILDING them costs real driver time (one py4j
-        # round-trip per operator; a single class's emission array
-        # measured ~0.2 s to construct). Rebuilding them every wave
-        # made deep-chain crawls driver-bound: the event log showed
-        # ~1 s of job-free driver gap per wave against ~0.3 s of
-        # actual cluster work. Everything that does not depend on the
-        # wave number is built exactly once here and reused.
-        host_expr = host_of(F.col("url"))
-        canon_expr = canonicalize_url(F.col("url"))
-        uhash_expr = url_hash(F.col("canon_url"))
-        # page identity = (class, canonical URL, input): the reference
-        # processes every Page instance — its response cache only
-        # skips the HTTP call, not processing — so the seen set /
-        # first-wins dedup must NOT collapse distinct (cls, input)
-        # pairs sharing one URL.
-        seen_key_expr = F.xxhash64(
-            F.col("page_cls"), F.col("url_hash"),
-            F.coalesce(F.col("input_json"), F.lit("\x00")),
-        )
-        robots_allowed_expr = (
-            politeness_ops.robots_allow_expr(self._robots_rules)
-            if self._robots_rules else None
-        )
-        # fetched marker (seen-set source) ++ per-class native arrays;
-        # exactly ONE consumer per batch row
-        marker_expr = F.when(
-            F.col("url").isNotNull() & (F.col("attempts") == 0),
-            N.one(N.emission("fetched", url_hash=F.col("url_hash"),
-                             seen_key=F.col("seen_key"),
-                             attempts=F.col("attempts"))),
-        ).otherwise(N.empty_emissions())
-        cls_arr = None
-        for name in native_cls:
-            arr = self._class_emission_array(specs[name])
-            cond = F.col("page_cls") == name
-            cls_arr = (
-                F.when(cond, arr) if cls_arr is None
-                else cls_arr.when(cond, arr)
+    def _schedule(self, st: _CrawlState, plan: _WavePlan, w: _Wave) -> None:
+        """Phase schedule: politeness, robots, then seen-set and
+        first-wins dedup choose the rows this wave fetches."""
+        # When the previous wave landed on the driver AND the exact
+        # seen set has a live Python twin, the dedup runs here in plain
+        # Python — the wave then needs ZERO shuffle stages: a local
+        # frontier broadcast-joins the page store and the single AQE
+        # round does fetch+process+collect.
+        rows, st.frontier_rows = st.frontier_rows, None
+        if (
+            rows is not None
+            and st.py_seen is not None
+            and plan.driver_dedup_ok
+            and all(r[1] is None or (r[7] is not None and r[8] is not None)
+                    for r in rows)
+        ):
+            w.local = True
+            w.null_rows = [r for r in rows if r[1] is None]
+            w.rows = _dedup_rows(rows, st.py_seen)
+            return
+        cfg = self.config
+        frontier = st.frontier.withColumn("host", plan.host)
+        # politeness budget (F5): overflow deferred, paths untouched.
+        # Disabled => no deferred branch at all: a limit(0) twin of the
+        # frontier subtree would still be re-analyzed and unioned every
+        # wave (measurable driver planning cost on small waves). When
+        # the WHOLE wave fits inside the default budget no single host
+        # can exceed it: the limiter is a provable no-op, so its
+        # per-wave count aggregate + broadcast join are skipped (only
+        # sound without a politeness table, whose per-host budgets can
+        # undercut the default)
+        if self.politeness is None and (
+            cfg.host_budget_per_wave is None
+            or w.n_frontier <= cfg.host_budget_per_wave
+        ):
+            scheduled = frontier
+        else:
+            scheduled, w.deferred = politeness_ops.split_by_host_budget(
+                frontier, self.politeness, cfg.host_budget_per_wave,
             )
-        per_row_expr = marker_expr
-        if cls_arr is not None:
-            per_row_expr = F.concat(
-                marker_expr, F.coalesce(cls_arr, N.empty_emissions())
+        # robots (F6): precompiled CASE expression when the rule set is
+        # small; broadcast-join longest-prefix path when it isn't
+        # (never a silent truncation). Blocked rows become 'blocked'
+        # emissions so the count rides the wave Observation for free.
+        if plan.robots_allowed is not None:
+            decided = scheduled.withColumn("_allowed", plan.robots_allowed)
+            scheduled = decided.filter(F.col("_allowed")).drop("_allowed")
+            w.blocked = decided.filter(~F.col("_allowed")).drop("_allowed")
+        elif self._robots_join:
+            scheduled, w.blocked = politeness_ops.robots_broadcast_join(
+                scheduled, self._robots_prefix_df, self._robots_wild,
             )
-        nullsrc_cols = [
-            "page_cls", "path", "url", "input_json",
-            F.lit(None).cast("binary").alias("payload"),
-            F.lit(None).cast("array<string>").alias("links"),
-            F.lit(None).cast("string").alias("next_url"),
-            F.lit(200).alias("status"),
-            "attempts", "page_seq",
-            F.lit(None).cast("string").alias("payload_kind"),
-            F.lit(None).cast("string").alias("image_id"),
-            F.lit(True).alias("found"),
-            "priority",
-            F.lit(0).alias("flaky_rejects"),
-            F.lit(None).cast("long").alias("url_hash"),
-            F.lit(None).cast("long").alias("seen_key"),
-        ]
-        blocked_cols = [
-            F.lit("blocked").alias("emit_kind"),
-            F.col("page_cls").alias("src_cls"),
-            "path",
-            F.lit(None).cast("string").alias("item_json"),
-            F.lit(None).cast("string").alias("child_cls"),
-            F.col("url").alias("child_url"),
-            F.col("input_json").alias("child_input_json"),
-            "priority", "page_seq", "attempts",
-            F.lit("robots.txt disallow").alias("error"),
-        ]
-        deferred_cols = [
-            F.lit("deferred").alias("emit_kind"),
-            F.col("page_cls").alias("src_cls"),
-            "path",
-            F.lit(None).cast("string").alias("item_json"),
-            F.col("page_cls").alias("child_cls"),
-            F.col("url").alias("child_url"),
-            F.col("input_json").alias("child_input_json"),
-            "priority", "page_seq", "attempts",
-            F.lit(None).cast("string").alias("error"),
-        ]
-        kind_names = ("item", "child", "next", "requeue", "skip_item",
-                      "skip_page", "handled_error", "error", "reject",
-                      "fetched", "blocked", "deferred")
-        obs_aggs = (
-            [F.count(F.when(F.col("emit_kind") == k, 1)).alias(k)
-             for k in kind_names]
-            + [F.count(F.when(
-                (F.col("emit_kind") == "deferred")
-                & (F.col("attempts") > 0), 1,
-            )).alias("_deferred_requeues")]
+        fetchable = scheduled.filter(
+            F.col("url").isNotNull()
+        ).withColumn(
+            "canon_url", plan.canon
+        ).withColumn(
+            # hash-at-emission already computed these for native-class
+            # children; recompute where null
+            "url_hash", F.coalesce(F.col("url_hash"), plan.uhash)
+        ).withColumn(
+            "seen_key", F.coalesce(F.col("seen_key"), plan.seen_key)
         )
-        frontier_cols = [
-            F.col("child_cls").alias("page_cls"),
-            F.col("child_url").alias("url"),
-            F.col("child_input_json").alias("input_json"),
-            F.col("path"),
-            F.col("priority"),
-            F.col("attempts"),
-            F.col("page_seq"),
-            F.col("url_hash"),
-            F.col("seen_key"),
-        ]
-        # hash-at-emission: frontier-bound emissions carry their child's
-        # page-identity hashes out of the SAME projection that built
-        # them (CSE shares the canonicalize subtree), so the next wave's
-        # dedup needs no recompute — and a driver-materialized wave can
-        # dedup in pure Python with zero Spark stages. Hook-class
-        # (Arrow) emissions leave them null; the cluster path coalesces
-        # a recompute in.
-        _followed = ["next", "requeue", "deferred"] + (
-            ["child"] if cfg.follow_children else []
-        )
-        _fr_kind_cond = (
-            F.col("emit_kind").isin(*_followed)
-            & F.col("child_url").isNotNull()
-            # invalid URLs keep a null hash: parse_url THROWS on them,
-            # and the legacy failure point is the next wave's fetchable
-            # prep (scout mode never follows children, so a malformed
-            # child link must not fail the scout wave)
-            & F.try_parse_url(
-                F.trim(F.col("child_url")), F.lit("HOST")).isNotNull()
-        )
-        _child_uh = url_hash(canonicalize_url(F.col("child_url")))
-        emit_hash_cols = [
-            c for c in _EMISSION_COLS if c not in ("url_hash", "seen_key")
-        ] + [
-            F.when(
-                _fr_kind_cond, F.coalesce(F.col("url_hash"), _child_uh)
-            ).otherwise(F.col("url_hash")).alias("url_hash"),
-            F.when(
-                _fr_kind_cond,
-                F.coalesce(
-                    F.col("seen_key"),
-                    F.xxhash64(
-                        F.col("child_cls"),
-                        F.coalesce(F.col("url_hash"), _child_uh),
-                        F.coalesce(F.col("child_input_json"), F.lit("\x00")),
-                    ),
-                ),
-            ).otherwise(F.col("seen_key")).alias("seen_key"),
-        ]
-        kinds = _followed  # frontier-bound emission kinds
+        w.nullsrc = scheduled.filter(F.col("url").isNull())
+        w.fetchable = self._dedup(st, fetchable, self._seen_union(st))
 
-        n_frontier: int | None = None  # None = unknown (seeds / resume)
-        self._prev_total_emissions: int | None = None
-        while True:
-            t = [_time.time()]
-            # adapt per-wave partitioning to the frontier size: tiny
-            # waves at full fan-out pay per-task/per-file overhead for
-            # nothing (measured 2x on deep chains); big waves keep full
-            # width. AQE handles the shuffles; this governs the
-            # coalesce + snapshot file counts.
-            if n_frontier is None:
-                # first wave / resume: one count (also sizes the fetch
-                # strategy — broadcast vs shuffle join)
-                n_frontier = frontier.count()
-            # size this wave's coalesce by its likely OUTPUT, not its
-            # input: a wave of list pages explodes ~fan-out× emissions
-            # (1994 seeds -> 2M children), and sizing by input once
-            # collapsed that whole explode+write into 8 tasks — a
-            # core-count-independent serial floor. The previous wave's
-            # total emission count is the fan-out-aware estimator;
-            # wave 0 (no history) keeps full width.
-            est = max(n_frontier, self._prev_total_emissions or 0)
-            if cfg.target_partitions is None and self._prev_total_emissions:
-                # cap at 2x the session width: big waves keep extra
-                # partitions so per-row cost variance (image decode)
-                # amortizes instead of straggling the stage tail.
-                # The payload-row ceiling is the scale guard: the wave
-                # coalesce collapses the whole fetch+decode+write stage
-                # to this width, so a 2x-cores cap alone puts est/(2N)
-                # payload rows in ONE task — 250k rows/task at N=4 on a
-                # 2M-row wave, and multi-GB tasks on a 10^10-row
-                # frontier regardless of cluster width. Partition count
-                # must track DATA size once waves outgrow the session
-                # width: ~64k payload rows per task keeps Arrow batches,
-                # python worker residency, and parquet writer buffers
-                # flat at any frontier size.
-                self._wave_parts = max(
-                    8 if self._nparts >= 8 else self._nparts,
-                    min(self._nparts * 2, est // 5000 + 1),
-                    min(est // _WAVE_ROWS_PER_PART + 1, 16384),
+    def _fetch_wave(self, plan: _WavePlan, w: _Wave) -> DataFrame:
+        """Phase fetch: the scheduled rows joined to their payloads,
+        plus the null-source rows (nothing to fetch), as one batch of
+        fetched rows."""
+        if w.local:
+            fetched = self._fetch_local(w.rows)
+            nullsrc = (
+                self._local_df(w.null_rows, schemas.FRONTIER_SCHEMA)
+                if w.null_rows else None
+            )
+        else:
+            fetched = self._fetch(
+                w.fetchable, broadcast=w.n_frontier <= self._bcast_fetch_max)
+            nullsrc = w.nullsrc
+        if nullsrc is not None:
+            fetched = fetched.unionByName(nullsrc.select(*plan.nullsrc_cols))
+        return fetched.select(*schemas.FETCHED_COLS)
+
+    def _emit(self, plan: _WavePlan, w: _Wave, batch: DataFrame) -> DataFrame:
+        """Phase emit: the wave's emission rows."""
+        # Exactly ONE consumer per batch row — native-class rows go
+        # through the single native projection (marker ++ class arrays,
+        # exploded once), hook-class rows through the Arrow transform
+        # which emits its own markers. No shared batch cache:
+        # payload-heavy rows stream straight through their one pass (a
+        # per-wave payload cache is 10s of GB at 10^6-row waves and was
+        # the old OOM ceiling).
+        parts = [
+            batch.filter(F.col("page_cls").isin(plan.native_cls))
+            .select(F.explode(plan.per_row).alias("e")).select("e.*")
+        ]
+        if plan.hook_cls:
+            parts.append(
+                batch.filter(F.col("page_cls").isin(plan.hook_cls))
+                .mapInPandas(plan.transform, _EMISSION_OUT_SCHEMA)
+            )
+        # robots-blocked rows ride the emissions stream so the count
+        # lands in the Observation (no extra job) and the rows reach
+        # the dead-letter output. Politeness-deferred rows ride it too:
+        # ONE materialization per wave carries everything — the next
+        # frontier is then a narrow filter over the written parquet
+        # instead of a second write+read job (measured: the two jobs
+        # were the per-wave fixed-cost floor)
+        if w.blocked is not None:
+            parts.append(w.blocked.select(*plan.blocked_cols))
+        if w.deferred is not None:
+            parts.append(w.deferred.select(*plan.deferred_cols))
+        emissions = parts[0]
+        for p in parts[1:]:
+            emissions = emissions.unionByName(p, allowMissingColumns=True)
+        return emissions
+
+    def _land(self, st: _CrawlState, plan: _WavePlan, w: _Wave,
+              emissions: DataFrame | None) -> None:
+        """Phase land: compute the wave's emissions once and tally them
+        by kind. ``emissions`` is None on a no-op wave (every candidate
+        already seen), which runs no Spark job at all."""
+        cfg = self.config
+        deferred_requeues = 0
+        if emissions is None:
+            w.lrows, w.counts = [], dict.fromkeys(_EMIT_KINDS, 0)
+            w.emissions = self._local_df([], _EMISSION_OUT_SCHEMA)
+        elif (
+            cfg.driver_wave_max
+            and st.prev_emissions is not None
+            and w.est <= cfg.driver_wave_max
+        ):
+            # small wave: land the slim emission rows on the driver
+            # (LocalRelation) — kind counts tallied in Python, no
+            # Observation, no spill round-trip. hash-at-emission
+            # (emit_hash_cols) applies ONLY here: the hashes are solely
+            # for the next wave's driver-side dedup, which requires THIS
+            # wave's rows on the driver — big cluster waves must not pay
+            # the extra per-child canonicalize+hash+write. A
+            # driver-local wave's plan is one broadcast probe + explode
+            # over a LocalRelation frontier — zero shuffle stages, so
+            # AQE's per-stage re-planning is pure overhead there (~8% of
+            # a 13-wave tree crawl measured)
+            aqe_off = {"spark.sql.adaptive.enabled": "false"}
+            with scoped_conf(self.spark, aqe_off if w.local else {}):
+                w.lrows = emissions.select(*plan.emit_hash_cols).collect()
+            w.counts = dict.fromkeys(_EMIT_KINDS, 0)
+            for r in w.lrows:
+                w.counts[r["emit_kind"]] += 1
+                if r["emit_kind"] == "deferred" and (r["attempts"] or 0) > 0:
+                    deferred_requeues += 1
+            w.emissions = self._local_df(w.lrows, _EMISSION_OUT_SCHEMA)
+        else:
+            # coalesce is narrow (no shuffle) and bounds the partition
+            # count: a union's partitioning is the SUM of its children's
+            w.emissions, obs = self._materialize(
+                st, emissions.coalesce(w.parts), "emissions", plan.obs_aggs)
+            w.counts = {k: int(obs[k]) for k in _EMIT_KINDS}
+            deferred_requeues = int(obs["_deferred_requeues"])
+        st.prev_emissions = sum(w.counts.values())
+        w.n_next = sum(w.counts[k] for k in plan.followed)
+        # the next wave needs the requeue split only if it can actually
+        # contain attempts>0 rows (fresh requeues or deferred ones)
+        st.requeues_possible = bool(w.counts["requeue"] or deferred_requeues)
+
+    def _record(self, st: _CrawlState, w: _Wave) -> None:
+        """Phase record: the wave's result rows, dead letters and
+        metrics row, as narrow filters over the landed emissions;
+        raises on a dead letter under ``fail_fast``."""
+        em, counts = w.emissions, w.counts
+        w.new_seen = em.filter(
+            F.col("emit_kind") == "fetched").select("url_hash", "seen_key")
+        if st.scout:
+            w.items = _scout_projection(em, st.wave)
+        else:
+            w.items = em.filter(F.col("emit_kind") == "item").select(
+                F.col("path"),
+                F.col("src_cls").alias("page_cls"),
+                F.col("item_json"),
+                F.lit(st.wave).alias("wave"),
+            )
+        st.results.append(w.items)
+        wave_dead = em.filter(
+            F.col("emit_kind").isin("error", "reject", "blocked"))
+        n_dead = counts["error"] + counts["reject"]
+        if self.config.fail_fast and n_dead:
+            samples = wave_dead.filter(
+                F.col("emit_kind").isin("error", "reject")
+            ).select("error").take(3)
+            raise CrawlError(
+                f"wave {st.wave}: {[s['error'] for s in samples]}")
+        st.dead.append(wave_dead)
+        st.metrics_rows.append({
+            "wave": st.wave,
+            "fetched": counts["fetched"],  # fetched-marker count
+            "items": counts["item"],
+            "children": counts["child"],
+            "next_pages": counts["next"],
+            "requeued": counts["requeue"],
+            "skipped_items": counts["skip_item"],
+            "skipped_pages": counts["skip_page"],
+            "handled_errors": counts["handled_error"],
+            "dead": n_dead,
+            "blocked": counts["blocked"],
+            "deferred": counts["deferred"],
+        })
+
+    def _update_seen(self, st: _CrawlState, w: _Wave) -> None:
+        """Phase seen-update: seen ∪= this wave's fetched keys."""
+        # The keys are already unique: in-wave first-wins + seen
+        # anti-join guarantee it; errored fetches are consumed too,
+        # matching the reference where an attempted URL is never
+        # re-fetched. No global distinct — that would reshuffle the
+        # whole seen set every wave. APPEND-ONLY with zero extra
+        # writes: the wave's new hashes already live in the landed
+        # emissions (the 'fetched' marker rows); the seen "table" is the
+        # union of those per-wave slices — parquet column pruning + the
+        # emit_kind predicate keep each scan to one slim column. (An
+        # Iceberg deployment appends to a real table instead; rewriting
+        # the accumulated set per wave would be O(total)/wave —
+        # impossible at 10^10.)
+        n_new = w.counts["fetched"]
+        if not n_new:
+            return
+        cfg = self.config
+        st.seen_slices.append(w.new_seen)
+        st.seen_count += n_new
+        # Python seen-set twin: fed from the driver-collected rows
+        # (free); a cluster wave keeps it alive with one tiny pruned
+        # collect ONLY when the next wave is small enough to use it —
+        # otherwise the twin dies and cluster dedup owns the rest of
+        # the crawl.
+        if st.py_seen is not None:
+            if w.lrows is not None:
+                st.py_seen.update(
+                    (r["url_hash"], r["seen_key"])
+                    for r in w.lrows if r["emit_kind"] == "fetched"
+                )
+            elif max(n_new, w.n_next) <= cfg.driver_wave_max:
+                st.py_seen.update(
+                    (r["url_hash"], r["seen_key"])
+                    for r in w.new_seen.collect()
                 )
             else:
-                self._wave_parts = self._nparts
-            self._n_frontier = n_frontier
-            if n_frontier == 0:
-                break
-            _tick("count", t)
-            if cfg.max_waves is not None and wave >= cfg.max_waves + start_wave:
-                break
+                st.py_seen = None
+            if st.py_seen is not None and (
+                    len(st.py_seen) > self._driver_seen_max):
+                st.py_seen = None  # driver-memory cap
+        if st.bloom is None or st.seen_count < cfg.bloom_min_seen:
+            return
+        if st.bloom.count == 0 and st.seen_count > n_new:
+            # lazy backfill: the filter only starts paying once the
+            # seen set crosses the threshold; fold in everything
+            # accumulated so far, once
+            st.bloom.add_hashes_df(self._seen_union(st), key_col="seen_key")
+        else:
+            # incremental: OR this wave's shard blobs into the
+            # driver-held filter (never a full rebuild)
+            st.bloom.add_hashes_df(w.new_seen, key_col="seen_key")
+        if st.bloom.needs_regrow():
+            # fill ratio past capacity: FPR would degrade geometrically
+            # from here; re-shard 4x wider from the exact seen table
+            # (geometric growth keeps total rebuild work O(N) over the
+            # crawl)
+            st.bloom.regrow(self._seen_union(st), key_col="seen_key")
 
-            # ------- small-wave fast path: dedup driver-side -------
-            # When the previous wave landed on the driver AND the exact
-            # seen set has a live Python twin, first-wins + seen dedup
-            # run here in plain Python — the wave then needs ZERO
-            # shuffle stages: a local frontier broadcast-joins the page
-            # store and the single AQE round does fetch+process+collect.
-            fast_rows = self._frontier_rows
-            self._frontier_rows = None
-            self._frontier_is_local = False
-            can_fast = (
-                fast_rows is not None
-                and cfg.dedup_urls
-                and self._py_seen is not None
-                and self.politeness is None
-                and cfg.host_budget_per_wave is None
-                and robots_allowed_expr is None
-                and not self._robots_join
-                and all(
-                    r[1] is None or (r[7] is not None and r[8] is not None)
-                    for r in fast_rows
-                )
+    def _next_frontier(self, st: _CrawlState, plan: _WavePlan,
+                       w: _Wave) -> int:
+        """Phase next-frontier: the next wave's frontier and its size."""
+        # a narrow filter over the ALREADY landed emissions — no second
+        # write+read. Lineage stays bounded: every wave's frontier
+        # derives from exactly one parquet scan (deferred rows were
+        # folded into the emissions write).
+        st.frontier = w.emissions.filter(
+            F.col("emit_kind").isin(plan.followed)
+        ).select(*plan.frontier_cols)
+        if w.lrows is not None:
+            # frontier rows in FRONTIER_SCHEMA order for the next
+            # wave's driver-side dedup
+            st.frontier_rows = [
+                (r["child_cls"], r["child_url"],
+                 r["child_input_json"], r["path"],
+                 int(r["priority"] or 0), int(r["attempts"] or 0),
+                 int(r["page_seq"] or 0), r["url_hash"],
+                 r["seen_key"])
+                for r in w.lrows if r["emit_kind"] in plan.followed
+            ]
+        return w.n_next
+
+    def _commit(self, st: _CrawlState, w: _Wave) -> None:
+        """Phase commit: the wave's snapshot — an Iceberg commit, or
+        every ``checkpoint_every`` waves a parquet-manifest checkpoint
+        of the deltas accumulated since the last one."""
+        cfg = self.config
+        new_seen = w.new_seen if w.counts["fetched"] else None
+        if st.ice is not None:
+            st.ice.commit_wave(
+                st.wave, st.frontier, new_seen, w.items, st.metrics_rows)
+            st.frontier = (
+                self.spark.table(st.ice._t("frontier"))
+                .filter(F.col("wave") == st.wave).drop("wave")
             )
-            deferred = None
-            blocked = None
-            nullsrc = None
-            sched_rows: list[tuple] = []
-            null_rows: list[tuple] = []
-            if can_fast:
-                # FRONTIER_SCHEMA tuple slots: 1=url 3=path 5=attempts
-                # 7=url_hash 8=seen_key
-                null_rows = [r for r in fast_rows if r[1] is None]
-                req_rows = [
-                    r for r in fast_rows
-                    if r[1] is not None and (r[5] or 0) > 0
-                ]
-                best: dict[tuple[int, int], tuple] = {}
-                for r in fast_rows:
-                    if r[1] is None or (r[5] or 0) > 0:
-                        continue  # null-source / requeue bypass
-                    k = (r[7], r[8])
-                    b = best.get(k)
-                    if b is None or r[3] < b[3]:  # first-wins = min path
-                        best[k] = r
-                sched_rows = [
-                    r for k, r in best.items() if k not in self._py_seen
-                ] + req_rows
-                self._n_frontier = len(sched_rows)
+            return
+        if not cfg.checkpoint_dir:
+            return
+        st.ckpt_items.append(w.items)
+        if new_seen is not None:
+            st.ckpt_seen.append(new_seen)
+        if (st.wave + 1 - st.start_wave) % max(1, cfg.checkpoint_every):
+            return
+        self._commit_checkpoint(st, st.wave)
+        if not cfg.checkpoint_async:
+            # sync mode re-reads the just-committed frontier (the next
+            # wave scans the durable copy); async keeps the
+            # scratch-parquet plan so the wave never waits on the commit
+            st.frontier = self.spark.read.parquet(os.path.join(
+                cfg.checkpoint_dir, f"wave={st.wave}", "frontier"))
 
-            if can_fast and not sched_rows and not null_rows:
-                # every candidate was already seen: a no-op wave —
-                # skip the Spark job entirely
-                lrows: list | None = []
-                emissions = spark.createDataFrame(
-                    spark.sparkContext.parallelize([], 1),
-                    schema=_EMISSION_OUT_SCHEMA,
-                )
-                kind_counts = {k: 0 for k in kind_names}
-                deferred_requeues = 0
-            else:
-                if can_fast:
-                    if null_rows:
-                        nullsrc = spark.createDataFrame(
-                            spark.sparkContext.parallelize(null_rows, 1),
-                            schema=schemas.FRONTIER_SCHEMA,
-                        )
-                    self._frontier_is_local = True
-                    fetched = self._fetch_local(sched_rows)
-                else:
-                    frontier = frontier.withColumn("host", host_expr)
-
-                    # politeness budget (F5): overflow deferred, paths
-                    # untouched. Disabled => no deferred branch at all:
-                    # a limit(0) twin of the frontier subtree would
-                    # still be re-analyzed and unioned every wave
-                    # (measurable driver planning cost on small waves).
-                    if (self.politeness is None
-                            and cfg.host_budget_per_wave is None):
-                        scheduled = frontier
-                    elif (self.politeness is None
-                          and n_frontier <= cfg.host_budget_per_wave):
-                        # the WHOLE wave fits inside the default budget,
-                        # so no single host can exceed it: the limiter
-                        # is a provable no-op — skip its per-wave count
-                        # aggregate + broadcast join (r6; only sound
-                        # without a politeness table, whose per-host
-                        # budgets can undercut the default)
-                        scheduled = frontier
-                    else:
-                        scheduled, deferred = (
-                            politeness_ops.split_by_host_budget(
-                                frontier, self.politeness,
-                                cfg.host_budget_per_wave,
-                            )
-                        )
-                    # robots (F6): precompiled CASE expression when the
-                    # rule set is small; broadcast-join longest-prefix
-                    # path when it isn't (never a silent truncation).
-                    # Blocked rows become 'blocked' emissions so the
-                    # count rides the wave Observation for free.
-                    if robots_allowed_expr is not None:
-                        decided = scheduled.withColumn(
-                            "_allowed", robots_allowed_expr)
-                        scheduled = decided.filter(
-                            F.col("_allowed")).drop("_allowed")
-                        blocked = decided.filter(
-                            ~F.col("_allowed")).drop("_allowed")
-                    elif self._robots_join:
-                        scheduled, blocked = (
-                            politeness_ops.robots_broadcast_join(
-                                scheduled, self._robots_prefix_df,
-                                self._robots_wild,
-                            )
-                        )
-
-                    fetchable = scheduled.filter(
-                        F.col("url").isNotNull()
-                    ).withColumn(
-                        "canon_url", canon_expr
-                    ).withColumn(
-                        # hash-at-emission already computed these for
-                        # native-class children; recompute where null
-                        "url_hash", F.coalesce(F.col("url_hash"),
-                                               uhash_expr)
-                    ).withColumn(
-                        "seen_key", F.coalesce(F.col("seen_key"),
-                                               seen_key_expr)
-                    )
-                    nullsrc = scheduled.filter(F.col("url").isNull())
-
-                    if cfg.dedup_urls:
-                        fetchable = self._dedup(
-                            fetchable, self._seen_union())
-
-                    fetched = self._fetch(fetchable)
-                if nullsrc is None:
-                    batch = fetched.select(*_BATCH_SELECT)
-                else:
-                    batch = fetched.unionByName(
-                        nullsrc.select(*nullsrc_cols)
-                    ).select(*_BATCH_SELECT)
-
-                # Exactly ONE consumer per batch row — native-class
-                # rows go through the single native projection (marker
-                # ++ class arrays, exploded once), hook-class rows
-                # through the Arrow transform which emits its own
-                # markers. No shared batch cache: payload-heavy rows
-                # stream straight through their one pass (a per-wave
-                # payload cache is 10s of GB at 10^6-row waves and was
-                # the old OOM ceiling).
-                native_part = batch.filter(
-                    F.col("page_cls").isin(native_cls)
-                ).select(F.explode(per_row_expr).alias("e")).select("e.*")
-                parts: list[DataFrame] = [native_part]
-                if hook_cls:
-                    parts.append(
-                        batch.filter(
-                            F.col("page_cls").isin(hook_cls)
-                        ).mapInPandas(transform, _EMISSION_OUT_SCHEMA)
-                    )
-                if blocked is not None:
-                    # robots-blocked rows ride the emissions stream so
-                    # the count lands in the Observation (no extra job)
-                    # and the rows themselves reach the dead-letter
-                    # output
-                    parts.append(blocked.select(*blocked_cols))
-                # politeness-deferred rows ride the emissions stream
-                # too: ONE materialization per wave carries everything
-                # — the next frontier is then a narrow filter over the
-                # written parquet instead of a second write+read job
-                # (measured: the two jobs were the per-wave fixed-cost
-                # floor)
-                if deferred is not None:
-                    parts.append(deferred.select(*deferred_cols))
-                emissions = parts[0]
-                for p in parts[1:]:
-                    emissions = emissions.unionByName(
-                        p, allowMissingColumns=True)
-                # bound partition count: a union's partitioning is the
-                # SUM of its children's — left unchecked the per-wave
-                # union fan-in compounds geometrically across waves
-                # (7×(P+8) per wave). coalesce is narrow (no shuffle)
-                # and caps every wave at nparts.
-                if (
-                    cfg.driver_wave_max
-                    and self._prev_total_emissions is not None
-                    and est <= cfg.driver_wave_max
-                ):
-                    # small wave: land the slim emission rows on the
-                    # driver (LocalRelation) — kind counts tallied in
-                    # Python, no Observation, no spill round-trip.
-                    # hash-at-emission (emit_hash_cols) applies ONLY
-                    # here: the hashes are solely for the next wave's
-                    # driver-side dedup, which requires THIS wave's rows
-                    # on the driver — big cluster waves must not pay the
-                    # extra per-child canonicalize+hash+write
-                    # driver-local wave: the plan is one broadcast
-                    # probe + explode over a LocalRelation frontier —
-                    # zero shuffle stages, so AQE's per-stage
-                    # re-planning is pure overhead here (~8% of a
-                    # 13-wave tree crawl measured); big cluster waves
-                    # keep AQE untouched
-                    _aqe = None
-                    if self._frontier_is_local:
-                        _aqe = spark.conf.get(
-                            "spark.sql.adaptive.enabled", "true")
-                        spark.conf.set(
-                            "spark.sql.adaptive.enabled", "false")
-                    try:
-                        lrows = emissions.select(
-                            *emit_hash_cols).collect()
-                    finally:
-                        if _aqe is not None:
-                            spark.conf.set(
-                                "spark.sql.adaptive.enabled", _aqe)
-                    kind_counts = {k: 0 for k in kind_names}
-                    deferred_requeues = 0
-                    for r in lrows:
-                        kind_counts[r["emit_kind"]] += 1
-                        if (r["emit_kind"] == "deferred"
-                                and (r["attempts"] or 0) > 0):
-                            deferred_requeues += 1
-                    # ONE partition: plain createDataFrame parallelizes
-                    # to defaultParallelism slices, and per-wave unions
-                    # then compound task counts geometrically (measured
-                    # 161 → 417 tasks/stage by wave 12 of a tree crawl)
-                    emissions = spark.createDataFrame(
-                        spark.sparkContext.parallelize(lrows, 1),
-                        schema=_EMISSION_OUT_SCHEMA,
-                    )
-                else:
-                    lrows = None
-                    emissions, emetrics = self._materialize(
-                        emissions.coalesce(self._wave_parts), "emissions",
-                        obs_aggs,
-                    )
-                    kind_counts = {k: int(emetrics[k]) for k in kind_names}
-                    deferred_requeues = int(emetrics["_deferred_requeues"])
-            self._prev_total_emissions = sum(kind_counts.values())
-            n_frontier_next = sum(kind_counts.get(k, 0) for k in kinds)
-            n_new = kind_counts["fetched"]
-            # next wave needs the requeue split only if it can actually
-            # contain attempts>0 rows (fresh requeues or deferred ones)
-            self._requeues_possible = bool(
-                kind_counts.get("requeue", 0) or deferred_requeues
-            )
-            _tick("emissions ckpt", t)
-            new_seen = emissions.filter(
-                F.col("emit_kind") == "fetched"
-            ).select("url_hash", "seen_key")
-
-            if cfg.scout:
-                wave_items = _scout_projection(emissions, wave)
-            else:
-                wave_items = emissions.filter(
-                    F.col("emit_kind") == "item"
-                ).select(
-                    F.col("path"),
-                    F.col("src_cls").alias("page_cls"),
-                    F.col("item_json"),
-                    F.lit(wave).alias("wave"),
-                )
-            results.append(wave_items)
-
-            wave_dead = emissions.filter(
-                F.col("emit_kind").isin("error", "reject", "blocked")
-            )
-            n_dead = int(
-                kind_counts.get("error", 0) + kind_counts.get("reject", 0)
-            )
-            if cfg.fail_fast and n_dead:
-                samples = wave_dead.filter(
-                    F.col("emit_kind").isin("error", "reject")
-                ).select("error").take(3)
-                raise CrawlError(
-                    f"wave {wave}: {[s['error'] for s in samples]}"
-                )
-            dead.append(wave_dead)
-
-            # seen ∪= this wave's first-attempt hashes (already unique:
-            # in-wave first-wins + seen anti-join guarantee it; errored
-            # fetches are consumed too, matching the reference where an
-            # attempted URL is never re-fetched). No global distinct —
-            # that would reshuffle the whole seen set every wave.
-            if n_new:
-                # APPEND-ONLY with zero extra writes: the wave's new
-                # hashes already live in the materialized emissions
-                # (the 'fetched' marker rows); the seen "table" is the
-                # union of those per-wave slices — parquet column
-                # pruning + the emit_kind predicate keep each scan to
-                # one slim column. (An Iceberg deployment appends to a
-                # real table instead; rewriting the accumulated set per
-                # wave would be O(total)/wave — impossible at 10^10.)
-                self._seen_slices.append(new_seen)
-                self._seen_count += n_new
-                # Python seen-set twin: fed from the driver-collected
-                # rows (free); a cluster wave keeps it alive with one
-                # tiny pruned collect ONLY when the next wave is small
-                # enough to use it — otherwise the twin dies and
-                # cluster dedup owns the rest of the crawl.
-                if self._py_seen is not None:
-                    if lrows is not None:
-                        self._py_seen.update(
-                            (r["url_hash"], r["seen_key"])
-                            for r in lrows if r["emit_kind"] == "fetched"
-                        )
-                    elif (
-                        n_new <= cfg.driver_wave_max
-                        and n_frontier_next <= cfg.driver_wave_max
-                    ):
-                        self._py_seen.update(
-                            (r["url_hash"], r["seen_key"])
-                            for r in new_seen.collect()
-                        )
-                    else:
-                        self._py_seen = None
-                    if (
-                        self._py_seen is not None
-                        and len(self._py_seen) > self._driver_seen_max
-                    ):
-                        self._py_seen = None  # driver-memory cap
-                if (
-                    self._bloom is not None
-                    and self._seen_count >= cfg.bloom_min_seen
-                ):
-                    if self._bloom.count == 0 and self._seen_count > n_new:
-                        # lazy backfill: the filter only starts paying
-                        # once the seen set crosses the threshold; fold
-                        # in everything accumulated so far, once
-                        self._bloom.add_hashes_df(
-                            self._seen_union(), key_col="seen_key")
-                    else:
-                        # incremental: OR this wave's shard blobs into
-                        # the driver-held filter (never a full rebuild)
-                        self._bloom.add_hashes_df(new_seen, key_col="seen_key")
-                    if self._bloom.needs_regrow(cfg.bloom_regrow_fill):
-                        # fill ratio past threshold: FPR would degrade
-                        # geometrically from here; re-shard 4x wider
-                        # from the exact seen table (geometric growth
-                        # keeps total rebuild work O(N) over the crawl)
-                        self._bloom.regrow(
-                            self._seen_union(), key_col="seen_key")
-            _tick("seen update", t)
-
-            # next frontier: a narrow filter over the ALREADY
-            # materialized emissions parquet — no second write+read.
-            # Lineage stays bounded: every wave's frontier derives from
-            # exactly one parquet scan (deferred rows were folded into
-            # the emissions write above).
-            frontier = emissions.filter(
-                F.col("emit_kind").isin(kinds)
-            ).select(*frontier_cols)
-            if lrows is not None:
-                # frontier rows in FRONTIER_SCHEMA order for the next
-                # wave's driver-side dedup
-                self._frontier_rows = [
-                    (r["child_cls"], r["child_url"],
-                     r["child_input_json"], r["path"],
-                     int(r["priority"] or 0), int(r["attempts"] or 0),
-                     int(r["page_seq"] or 0), r["url_hash"],
-                     r["seen_key"])
-                    for r in lrows if r["emit_kind"] in kinds
-                ]
-            n_frontier = n_frontier_next
-            _tick("frontier derive", t)
-
-            metrics_rows.append(
-                {
-                    "wave": wave,
-                    "fetched": int(n_new),  # fetched-marker count
-                    "items": int(kind_counts.get("item", 0)),
-                    "children": int(kind_counts.get("child", 0)),
-                    "next_pages": int(kind_counts.get("next", 0)),
-                    "requeued": int(kind_counts.get("requeue", 0)),
-                    "skipped_items": int(kind_counts.get("skip_item", 0)),
-                    "skipped_pages": int(kind_counts.get("skip_page", 0)),
-                    "handled_errors": int(kind_counts.get("handled_error", 0)),
-                    "dead": int(
-                        kind_counts.get("error", 0) + kind_counts.get("reject", 0)
-                    ),
-                    "blocked": int(kind_counts.get("blocked", 0)),
-                    "deferred": int(kind_counts.get("deferred", 0)),
-                }
-            )
-
-            if self._ice is not None:
-                self._ice.commit_wave(
-                    wave, frontier, new_seen if n_new else None,
-                    wave_items, metrics_rows,
-                )
-                frontier = (
-                    spark.table(self._ice._t("frontier"))
-                    .filter(F.col("wave") == wave).drop("wave")
-                )
-            elif cfg.checkpoint_dir:
-                self._ckpt_items.append(wave_items)
-                if n_new:
-                    self._ckpt_seen.append(new_seen)
-                every = max(1, cfg.checkpoint_every)
-                if (wave + 1 - start_wave) % every == 0:
-                    self._commit_checkpoint(cfg, wave, frontier, metrics_rows)
-                    if not cfg.checkpoint_async:
-                        # sync mode re-reads the just-committed frontier
-                        # (the r4 behavior: the next wave scans the
-                        # durable copy); async keeps the scratch-parquet
-                        # plan so the wave never waits on the commit
-                        frontier = spark.read.parquet(
-                            os.path.join(
-                                cfg.checkpoint_dir, f"wave={wave}", "frontier"
-                            )
-                        )
-
-            wave += 1
-
-        if self._ice is None and cfg.checkpoint_dir:
-            if self._ckpt_items or self._ckpt_seen:
+    def _finish(self, st: _CrawlState) -> CrawlResult:
+        if st.ice is None and self.config.checkpoint_dir:
+            if st.ckpt_items or st.ckpt_seen:
                 # flush deltas from the tail waves of an every-K window
                 # (frontier is the final — possibly empty — frontier, so
                 # a resume from this snapshot sees the finished crawl)
-                self._commit_checkpoint(cfg, wave - 1, frontier, metrics_rows)
-            self._join_checkpoint()
-
-        all_results = _union_tree(
-            [spark.createDataFrame([], schemas.RESULT_SCHEMA)] + results
-        )
-        all_dead = _union_tree(
-            [spark.createDataFrame([], _EMISSION_OUT_SCHEMA)] + dead,
-            allow_missing=True,
-        )
+                self._commit_checkpoint(st, st.wave - 1)
+            self._join_checkpoint(st)
+            if st.ckpt_pool is not None:
+                st.ckpt_pool.shutdown()
+        spark = self.spark
         return CrawlResult(
-            results=all_results,
-            dead=all_dead,
-            seen=self._seen_union(),
-            metrics=pd.DataFrame(metrics_rows),
-            waves=wave - start_wave,
+            results=_union_tree(
+                [spark.createDataFrame([], schemas.RESULT_SCHEMA)]
+                + st.results
+            ),
+            dead=_union_tree(
+                [spark.createDataFrame([], _EMISSION_OUT_SCHEMA)] + st.dead,
+                allow_missing=True,
+            ),
+            seen=self._seen_union(st),
+            metrics=pd.DataFrame(st.metrics_rows),
+            waves=st.wave - st.start_wave,
         )
 
     # ------------------------------------------------------------- internals
@@ -1584,7 +1369,8 @@ class CrawlEngine:
             )
         return F.when(failed, err).otherwise(ok)
 
-    def _dedup(self, fetchable: DataFrame, seen: DataFrame) -> DataFrame:
+    def _dedup(self, st: _CrawlState, fetchable: DataFrame,
+               seen: DataFrame) -> DataFrame:
         """Seen-set + in-wave dedup (F4 + E5-at-frontier, first-wins).
 
         Keyed on ``seen_key`` = (page_cls, url_hash, input) — page
@@ -1604,10 +1390,9 @@ class CrawlEngine:
         reuse) only happens in waves that can actually contain
         requeues, tracked from the previous wave's emission counts.
         """
-        cfg = self.config
         requeues = None
         first_time = fetchable
-        if self._requeues_possible:
+        if st.requeues_possible:
             first_time = fetchable.filter(F.col("attempts") == 0)
             requeues = fetchable.filter(F.col("attempts") > 0)
 
@@ -1629,35 +1414,26 @@ class CrawlEngine:
             .select("url_hash", "seen_key", "_r.*")
         )
 
-        if self._seen_count > 0:
-            use_bloom = (
-                cfg.use_bloom
-                and self._bloom is not None
-                and self._seen_count >= cfg.bloom_min_seen
-            )
+        if st.seen_count > 0:
             anti_keys = ["url_hash", "seen_key"]
-            if use_bloom:
-                maybe_seen = self._bloom.membership_udf(self.spark)
-                flagged = first_time.withColumn(
+            if (st.bloom is not None
+                    and st.seen_count >= self.config.bloom_min_seen):
+                # bloom prefilter, exact confirm: left join + filter
+                # instead of split/anti/union — same rows survive
+                # ("definitely unseen" kept outright, "maybe" kept only
+                # without an exact match), but the left side's url_hash
+                # partitioning flows through to the fetch join — a
+                # union of the two slivers would discard it
+                maybe_seen = st.bloom.membership_udf(self.spark)
+                marked = first_time.withColumn(
                     "_maybe", maybe_seen(F.col("seen_key"))
+                ).join(
+                    seen.select(*anti_keys).withColumn("_seen", F.lit(True)),
+                    anti_keys, "left",
                 )
-                if cfg.bloom_exact_confirm:
-                    # left join + filter instead of split/anti/union:
-                    # same rows survive ("definitely unseen" kept
-                    # outright, "maybe" kept only without an exact
-                    # match), but the left side's url_hash partitioning
-                    # flows through to the fetch join — a union of the
-                    # two slivers would discard it
-                    marked = flagged.join(
-                        seen.select(*anti_keys)
-                        .withColumn("_seen", F.lit(True)),
-                        anti_keys, "left",
-                    )
-                    first_time = marked.filter(
-                        (~F.col("_maybe")) | F.col("_seen").isNull()
-                    ).drop("_maybe", "_seen")
-                else:
-                    first_time = flagged.filter(~F.col("_maybe")).drop("_maybe")
+                first_time = marked.filter(
+                    (~F.col("_maybe")) | F.col("_seen").isNull()
+                ).drop("_maybe", "_seen")
             else:
                 first_time = first_time.join(seen, anti_keys, "left_anti")
         if requeues is not None:
@@ -1668,41 +1444,24 @@ class CrawlEngine:
         """(found-row, missing-row) projections for the fetch join,
         built once (wave-invariant Column trees)."""
         if self._fetch_cols is None:
+            found = {
+                "status": F.coalesce(F.col("status"), F.lit(404)),
+                "found": F.col("store_url").isNotNull(),
+                # synthetic flakiness: how many leading attempts the
+                # "server" degrades — consumed by accept hooks
+                "flaky_rejects": F.coalesce(F.col("flaky_rejects"), F.lit(0)),
+            }
             self._fetch_cols = (
-                [
-                    "page_cls", "path", "url", "input_json", "payload",
-                    "links", "next_url",
-                    F.coalesce(F.col("status"), F.lit(404)).alias("status"),
-                    "attempts", "page_seq", "payload_kind", "image_id",
-                    F.col("store_url").isNotNull().alias("found"),
-                    "priority",
-                    # synthetic flakiness: how many leading attempts the
-                    # "server" degrades — consumed by accept hooks
-                    F.coalesce(F.col("flaky_rejects"), F.lit(0))
-                    .alias("flaky_rejects"),
-                    "url_hash", "seen_key",
-                ],
-                [
-                    "page_cls", "path", "url", "input_json",
-                    F.lit(None).cast("binary").alias("payload"),
-                    F.lit(None).cast("array<string>").alias("links"),
-                    F.lit(None).cast("string").alias("next_url"),
-                    F.lit(404).alias("status"),
-                    "attempts", "page_seq",
-                    F.lit(None).cast("string").alias("payload_kind"),
-                    F.lit(None).cast("string").alias("image_id"),
-                    F.lit(False).alias("found"),
-                    "priority",
-                    F.lit(0).alias("flaky_rejects"),
-                    "url_hash", "seen_key",
-                ],
+                [found[n].alias(n) if n in found else n
+                 for n in schemas.FETCHED_COLS],
+                _no_payload_cols(404, found=False),
             )
         return self._fetch_cols
 
     def _store_keyset(self) -> set[int] | None:
         """One-time driver copy of the store's url_hash set, or None
         when the store is too big for the driver
-        (``driver_store_keys_max``)."""
+        (``self._driver_store_keys_max``)."""
         if self._store_keys_py is False:  # sentinel: not yet decided
             if (
                 self.page_store is not None
@@ -1724,64 +1483,52 @@ class CrawlEngine:
         NO anti-join leg — one broadcast build plus the store probe.
         Falls back to the generic `_fetch` (real-HTTP fetcher, or a
         store too big for a driver keyset)."""
-        spark = self.spark
         if self._store_rows is None and self.page_store is not None:
             self._store_rows = self.page_store.count()
         keyset = None if self.fetch_fn is not None else self._store_keyset()
         if keyset is None:
-            fetchable = spark.createDataFrame(
-                spark.sparkContext.parallelize(rows, 1),
-                schema=schemas.FRONTIER_SCHEMA,
+            # a driver-local frontier always broadcasts: the build is
+            # free (LocalRelation — no upstream recompute, the cost that
+            # makes the broadcast path lose on tiny CLUSTER waves) and
+            # the whole wave collapses to one AQE round with zero
+            # shuffle stages
+            fetchable = self._local_df(
+                rows, schemas.FRONTIER_SCHEMA
             ).withColumn("host", host_of(F.col("url")))
-            return self._fetch(fetchable)
-        out_cols, _ = self._fetch_out_cols()
+            return self._fetch(fetchable, broadcast=True)
+        found_cols, missing_cols = self._fetch_out_cols()
         found = [r for r in rows if r[7] in keyset]
-        missing = [
-            # out_cols order: page_cls path url input_json payload links
-            # next_url status attempts page_seq payload_kind image_id
-            # found priority flaky_rejects url_hash seen_key
-            (r[0], r[3], r[1], r[2], None, None, None, 404, r[5], r[6],
-             None, None, False, r[4], 0, r[7], r[8])
-            for r in rows if r[7] not in keyset
-        ]
+        missing = [r for r in rows if r[7] not in keyset]
         parts = []
         if found:
-            fr = spark.createDataFrame(
-                spark.sparkContext.parallelize(found, 1),
-                schema=schemas.FRONTIER_SCHEMA,
-            )
+            fr = self._local_df(found, schemas.FRONTIER_SCHEMA)
             parts.append(
                 self.page_store.join(F.broadcast(fr), "url_hash", "inner")
-                .select(*out_cols)
+                .select(*found_cols)
             )
         if missing or not parts:
             parts.append(
-                spark.createDataFrame(
-                    spark.sparkContext.parallelize(missing, 1),
-                    schema=_FETCHED_LOCAL_SCHEMA,
-                )
+                self._local_df(missing, schemas.FRONTIER_SCHEMA)
+                .select(*missing_cols)
             )
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
 
-    def _fetch(self, fetchable: DataFrame) -> DataFrame:
+    def _fetch(self, fetchable: DataFrame, broadcast: bool) -> DataFrame:
         """The fetch stage: an equi-join against the synthetic page-store
         (reference ``URL.get_response`` sources.py:42-52 becomes a join),
         or the real-HTTP mapInPandas fetcher when ``fetch_fn`` is set —
-        identical output schema either way."""
+        identical output schema either way. ``broadcast``: the slim
+        frontier is small (or driver-local) enough to broadcast."""
         if self.fetch_fn is not None:
-            from ..operators.politeness import salted_repartition
-            from ..sources.http_fetch import FETCHED_SCHEMA
-
             # here host-salting genuinely matters: fetch work is
             # per-host network time, and a hot host would pile onto
             # one task (north-rule skew mandate)
-            fr = salted_repartition(
-                fetchable, self._nparts, self.config.salt_buckets
-            )
-            return fr.mapInPandas(self.fetch_fn, FETCHED_SCHEMA)
+            fr = politeness_ops.salted_repartition(
+                fetchable, self._nparts, _SALT_BUCKETS)
+            return fr.mapInPandas(self.fetch_fn, schemas.FETCHED_DDL)
         if self.page_store is None:
             raise CrawlError("no page_store configured")
         # NOTE on skew: the equi-join key is xxhash64(canon url) —
@@ -1794,14 +1541,7 @@ class CrawlEngine:
             # one count, first fetch only: gates the store-keys
             # broadcast below and warms the persisted store cache
             self._store_rows = self.page_store.count()
-        n = getattr(self, "_n_frontier", None)
-        # a driver-local frontier always broadcasts: the build is free
-        # (LocalRelation — no upstream recompute, the cost that makes
-        # the broadcast path lose on tiny CLUSTER waves) and the whole
-        # wave collapses to one AQE round with zero shuffle stages
-        if getattr(self, "_frontier_is_local", False) or (
-            n is not None and n <= self._bcast_fetch_max
-        ):
+        if broadcast:
             # default path: broadcast the SLIM frontier, probe the
             # payload-heavy store in place — no store shuffle ever, no
             # frontier shuffle at the join, and the transform/decode
@@ -1880,44 +1620,35 @@ class CrawlEngine:
         return spec.process_page(ctx)
 
     # ----------------------------------------------------------- checkpoint
-    def _commit_checkpoint(self, cfg, wave, frontier, metrics_rows):
+    def _commit_checkpoint(self, st: _CrawlState, wave: int) -> None:
         """Commit the accumulated item/seen deltas (every-K window) as
-        the wave-``wave`` snapshot — inline, or on the single
-        checkpoint thread when ``checkpoint_async``. The inputs are
-        filters over the wave's already-materialized scratch parquet
-        (immutable until crawl end), so the background write races
-        nothing; one worker thread serializes commits so the
+        the wave-``wave`` snapshot of ``st.frontier`` — inline, or on
+        the single checkpoint thread when ``checkpoint_async``. The
+        inputs are filters over the wave's already-materialized scratch
+        parquet (immutable until crawl end), so the background write
+        races nothing; one worker thread serializes commits so the
         manifest-last atomicity argument is unchanged."""
-        items = (
-            self._ckpt_items[0]
-            if len(self._ckpt_items) == 1
-            else _union_tree(self._ckpt_items)
+        cfg = self.config
+        args = (
+            cfg.checkpoint_dir, wave, st.frontier,
+            _union_tree(st.ckpt_seen) if st.ckpt_seen else None,
+            _union_tree(st.ckpt_items), list(st.metrics_rows),
         )
-        seen = _union_tree(self._ckpt_seen) if self._ckpt_seen else None
-        self._ckpt_items, self._ckpt_seen = [], []
-        mrows = list(metrics_rows)
-        if cfg.checkpoint_async:
-            from concurrent.futures import ThreadPoolExecutor
+        st.ckpt_items, st.ckpt_seen = [], []
+        if not cfg.checkpoint_async:
+            self._checkpoint(*args)
+            return
+        if st.ckpt_pool is None:
+            st.ckpt_pool = ThreadPoolExecutor(
+                max_workers=1, thread_name_prefix="ckpt")
+        self._join_checkpoint(st)
+        st.ckpt_future = st.ckpt_pool.submit(self._checkpoint, *args)
 
-            if self._ckpt_pool is None:
-                self._ckpt_pool = ThreadPoolExecutor(
-                    max_workers=1, thread_name_prefix="ckpt"
-                )
-            self._join_checkpoint()
-            self._ckpt_future = self._ckpt_pool.submit(
-                self._checkpoint, cfg.checkpoint_dir, wave, frontier,
-                seen, items, mrows,
-            )
-        else:
-            self._checkpoint(
-                cfg.checkpoint_dir, wave, frontier, seen, items, mrows
-            )
-
-    def _join_checkpoint(self):
+    def _join_checkpoint(self, st: _CrawlState) -> None:
         """Wait for (and surface errors from) the in-flight async
         snapshot commit, if any."""
-        if self._ckpt_future is not None:
-            f, self._ckpt_future = self._ckpt_future, None
+        if st.ckpt_future is not None:
+            f, st.ckpt_future = st.ckpt_future, None
             f.result()
 
     def _checkpoint(self, base, wave, frontier, seen_delta, items,
@@ -2109,17 +1840,7 @@ class CrawlEngine:
         {data, __next__}; children not followed, pagination followed.
         The projection is a native expression over emissions — items
         wrap their own payload, child rows their would-be input."""
-        import copy
-
-        saved = self.config
-        cfg = copy.copy(saved)
-        cfg.scout = True
-        cfg.follow_children = False
-        self.config = cfg
-        try:
-            res = self.crawl(seeds)
-        finally:
-            self.config = saved
+        res = self.crawl(seeds, _scout=True)
         rows = res.results.orderBy("path").select("item_json").collect()
         return [json.loads(r["item_json"]) for r in rows]
 
@@ -2206,3 +1927,167 @@ def _scout_projection(emissions: DataFrame, wave: int) -> DataFrame:
         F.lit(wave).alias("wave"),
     )
     return items.unionByName(children)
+
+
+class _WavePlan:
+    """Wave-invariant Column trees and class lists, built once per
+    ``crawl()``, never per wave."""
+
+    # Column objects are DataFrame-independent expression trees, but
+    # BUILDING them costs real driver time (one py4j round-trip per
+    # operator; a single class's emission array measured ~0.2 s to
+    # construct). Rebuilding them every wave made deep-chain crawls
+    # driver-bound: the event log showed ~1 s of job-free driver gap
+    # per wave against ~0.3 s of actual cluster work.
+    def __init__(self, eng: CrawlEngine, scout: bool):
+        specs = eng.registry.specs()
+        self.native_cls = [
+            n for n, s in specs.items() if s.native_emit_array is not None
+        ]
+        self.hook_cls = [
+            n for n, s in specs.items() if s.native_emit_array is None
+        ]
+        self.transform = _make_transform(specs, eng._resolve_dependencies())
+        # frontier-bound emission kinds
+        self.followed = ["next", "requeue", "deferred"] + (
+            [] if scout else ["child"])
+        self.robots_allowed = (
+            politeness_ops.robots_allow_expr(eng._robots_rules)
+            if eng._robots_rules else None
+        )
+        # no politeness and no robots: the driver may schedule a wave
+        self.driver_dedup_ok = (
+            eng.politeness is None
+            and eng.config.host_budget_per_wave is None
+            and self.robots_allowed is None
+            and not eng._robots_join
+        )
+        self.host = host_of(F.col("url"))
+        self.canon = canonicalize_url(F.col("url"))
+        self.uhash = url_hash(F.col("canon_url"))
+        # page identity = (class, canonical URL, input): the reference
+        # processes every Page instance — its response cache only
+        # skips the HTTP call, not processing — so the seen set /
+        # first-wins dedup must NOT collapse distinct (cls, input)
+        # pairs sharing one URL.
+        self.seen_key = F.xxhash64(
+            F.col("page_cls"), F.col("url_hash"),
+            F.coalesce(F.col("input_json"), F.lit("\x00")),
+        )
+        # fetched marker (seen-set source) ++ per-class native arrays;
+        # exactly ONE consumer per batch row
+        self.per_row = F.when(
+            F.col("url").isNotNull() & (F.col("attempts") == 0),
+            N.one(N.emission("fetched", url_hash=F.col("url_hash"),
+                             seen_key=F.col("seen_key"),
+                             attempts=F.col("attempts"))),
+        ).otherwise(N.empty_emissions())
+        cls_arr = None
+        for name in self.native_cls:
+            arr = eng._class_emission_array(specs[name])
+            cond = F.col("page_cls") == name
+            cls_arr = (
+                F.when(cond, arr) if cls_arr is None
+                else cls_arr.when(cond, arr)
+            )
+        if cls_arr is not None:
+            self.per_row = F.concat(
+                self.per_row, F.coalesce(cls_arr, N.empty_emissions()))
+        self.nullsrc_cols = _no_payload_cols(200, found=True)
+        self.blocked_cols = _unfetched_cols("blocked", "robots.txt disallow")
+        self.deferred_cols = _unfetched_cols("deferred")
+        self.obs_aggs = [
+            F.count(F.when(F.col("emit_kind") == k, 1)).alias(k)
+            for k in _EMIT_KINDS
+        ] + [F.count(F.when(
+            (F.col("emit_kind") == "deferred") & (F.col("attempts") > 0), 1,
+        )).alias("_deferred_requeues")]
+        self.emit_hash_cols = _emit_hash_cols(self.followed)
+        self.frontier_cols = [
+            F.col("child_cls").alias("page_cls"),
+            F.col("child_url").alias("url"),
+            F.col("child_input_json").alias("input_json"),
+            "path", "priority", "attempts", "page_seq",
+            "url_hash", "seen_key",
+        ]
+
+
+def _no_payload_cols(status: int, found: bool) -> list:
+    """Fetched-row projection of a frontier row that gets no payload:
+    a null source (200, found) or a page-store miss (404, not found)."""
+    fill = {"status": status, "found": found, "flaky_rejects": 0}
+    return [
+        n if n in schemas.FRONTIER_SCHEMA.names
+        else F.lit(fill.get(n)).cast(t).alias(n)
+        for n, t in schemas.FETCHED_FIELDS
+    ]
+
+
+def _unfetched_cols(kind: str, error: str | None = None) -> list:
+    """Emission projection of a frontier row the wave does not fetch:
+    'blocked' by robots (a dead letter) or 'deferred' by politeness
+    (re-queued into the next frontier as its own child)."""
+    child_cls = (
+        F.col("page_cls") if kind == "deferred"
+        else F.lit(None).cast("string")
+    )
+    return [
+        F.lit(kind).alias("emit_kind"),
+        F.col("page_cls").alias("src_cls"),
+        "path",
+        F.lit(None).cast("string").alias("item_json"),
+        child_cls.alias("child_cls"),
+        F.col("url").alias("child_url"),
+        F.col("input_json").alias("child_input_json"),
+        "priority", "page_seq", "attempts",
+        F.lit(error).cast("string").alias("error"),
+    ]
+
+
+def _emit_hash_cols(followed: list[str]) -> list:
+    """Emission projection of a driver-landed wave, hashing at emission:
+    frontier-bound rows carry their child's page-identity hashes out of
+    the SAME projection that built them (CSE shares the canonicalize
+    subtree), so the next wave's dedup needs no recompute and runs in
+    pure Python with zero Spark stages. Hook-class (Arrow) emissions
+    leave them null; the cluster path coalesces a recompute in."""
+    to_frontier = (
+        F.col("emit_kind").isin(*followed)
+        & F.col("child_url").isNotNull()
+        # invalid URLs keep a null hash: parse_url THROWS on them, and
+        # the legacy failure point is the next wave's fetchable prep
+        # (scout mode never follows children, so a malformed child
+        # link must not fail the scout wave)
+        & F.try_parse_url(
+            F.trim(F.col("child_url")), F.lit("HOST")).isNotNull()
+    )
+    uh = F.coalesce(
+        F.col("url_hash"), url_hash(canonicalize_url(F.col("child_url"))))
+    seen_key = F.coalesce(F.col("seen_key"), F.xxhash64(
+        F.col("child_cls"), uh,
+        F.coalesce(F.col("child_input_json"), F.lit("\x00")),
+    ))
+    return [c for c in _EMISSION_COLS if c not in ("url_hash", "seen_key")] + [
+        F.when(to_frontier, uh).otherwise(F.col("url_hash")).alias("url_hash"),
+        F.when(to_frontier, seen_key).otherwise(F.col("seen_key"))
+        .alias("seen_key"),
+    ]
+
+
+def _dedup_rows(rows: list[tuple], seen: set[tuple[int, int]]) -> list[tuple]:
+    """Driver-side wave dedup over FRONTIER_SCHEMA tuples (slots 1=url
+    3=path 5=attempts 7=url_hash 8=seen_key): first-wins (min path) per
+    page identity, minus the seen set. Requeues (attempts>0) bypass
+    both; null-source rows are left out."""
+    best: dict[tuple[int, int], tuple] = {}
+    requeues = []
+    for r in rows:
+        if r[1] is None:
+            continue
+        if (r[5] or 0) > 0:
+            requeues.append(r)
+            continue
+        k = (r[7], r[8])
+        if k not in best or r[3] < best[k][3]:
+            best[k] = r
+    return [r for k, r in best.items() if k not in seen] + requeues

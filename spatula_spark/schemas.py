@@ -39,24 +39,21 @@ FRONTIER_SCHEMA = T.StructType(
     ]
 )
 
-# tagged-union emission rows produced by a page transform — the Spark
-# encoding of "process_page may return an item, a Page, or a generator
-# of either" (`pages.py:225-241`).
-EMIT_KIND_ITEM = "item"
-EMIT_KIND_CHILD = "child"
-EMIT_KIND_NEXT = "next"
-
-EMISSION_SCHEMA = T.StructType(
-    [
-        T.StructField("emit_kind", T.StringType(), False),
-        T.StructField("path", T.StringType(), False),
-        T.StructField("item_json", T.StringType(), True),
-        T.StructField("child_cls", T.StringType(), True),
-        T.StructField("child_url", T.StringType(), True),
-        T.StructField("child_input_json", T.StringType(), True),
-        T.StructField("priority", T.IntegerType(), False),
-    ]
+# one fetched page: its frontier row plus the payload columns. The
+# contract between the fetch stage (page-store join, or the real-HTTP
+# fetcher in sources/http_fetch.py) and the page transforms; the
+# emission row it turns into is native.EMISSION_FIELDS.
+FETCHED_DDL = (
+    "page_cls string, path string, url string, input_json string, "
+    "payload binary, links array<string>, next_url string, status int, "
+    "attempts int, page_seq int, payload_kind string, image_id string, "
+    "found boolean, priority int, flaky_rejects int, "
+    "url_hash bigint, seen_key bigint"
 )
+FETCHED_FIELDS = tuple(
+    tuple(f.split(" ", 1)) for f in FETCHED_DDL.split(", ")
+)
+FETCHED_COLS = [n for n, _ in FETCHED_FIELDS]
 
 RESULT_SCHEMA = T.StructType(
     [

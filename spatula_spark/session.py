@@ -10,6 +10,8 @@ timestamps bit-for-bit.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -77,3 +79,27 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
+    """Set session SQL confs for the block; on exit, exception or not,
+    restore each key's prior value (or unset a key that was unset).
+
+    Session conf is shared by every thread of the driver, so this is
+    sound only under a single-driver-thread invariant: one thread plans
+    and runs the session's queries while the block is open. A query
+    planned on another thread meanwhile sees the toggled values (the
+    crawl's ``checkpoint_async`` writer is such a thread; the toggles
+    used here change its plan's shape, never its rows)."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -31,13 +31,8 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-FETCHED_SCHEMA = (
-    "page_cls string, path string, url string, input_json string, "
-    "payload binary, links array<string>, next_url string, status int, "
-    "attempts int, page_seq int, payload_kind string, image_id string, "
-    "found boolean, priority int, flaky_rejects int, url_hash long, "
-    "seen_key long"
-)
+# the batch schema a fetcher emits (re-exported for fetch_fn authors)
+from ..schemas import FETCHED_DDL as FETCHED_SCHEMA  # noqa: F401
 
 
 def _kind_of(ctype: str) -> str:

@@ -26,6 +26,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import scoped_conf
 from .windows import EVENTS_SCHEMA
 
 
@@ -45,7 +46,9 @@ def _state_partitions(spark: SparkSession, path: str) -> int:
     across ``shuffle.partitions`` stores is pure overhead (measured
     1.64s -> 0.91s on the sf0.1 dedup drain at 32 -> 8), while a
     high-throughput stream keeps full width. ~32 MB of source per
-    state partition, floor 8."""
+    state partition, floor 8. A size the local walk cannot see — a
+    remote URI (``s3://…``, ``hdfs://…``) or a missing path, both of
+    which walk as 0 bytes — is unknown, not small: session width."""
     n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     try:
         total = 0
@@ -54,7 +57,14 @@ def _state_partitions(spark: SparkSession, path: str) -> int:
                 total += os.path.getsize(os.path.join(dp, f))
     except OSError:
         return n
+    if total == 0:
+        return n
     return max(min(n, total // (32 << 20) + 1), min(8, n))
+
+
+def _state_conf(spark: SparkSession, path: str) -> dict[str, str]:
+    n = _state_partitions(spark, path)
+    return {"spark.sql.shuffle.partitions": str(n)}
 
 
 def stream_distinct_keys(
@@ -85,19 +95,13 @@ def stream_distinct_keys(
     # the query snapshots shuffle.partitions at start() as its state
     # partition count; derive it from input size, restore the session
     # conf immediately after
-    prev = spark.conf.get("spark.sql.shuffle.partitions", "32")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_state_partitions(spark, src))
-    )
-    try:
+    with scoped_conf(spark, _state_conf(spark, src)):
         q = (
             stream.writeStream.outputMode("append")
             .format("memory")
             .queryName(name)
             .start()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     try:
         q.processAllAvailable()
     finally:
@@ -133,11 +137,7 @@ def stream_distinct_derived(
     )
     deduped = derive(stream).dropDuplicatesWithinWatermark(list(out_cols))
     # input-sized state partitioning (see _state_partitions)
-    prev = spark.conf.get("spark.sql.shuffle.partitions", "32")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_state_partitions(spark, src))
-    )
-    try:
+    with scoped_conf(spark, _state_conf(spark, src)):
         q = (
             deduped.select(*out_cols)
             .writeStream.format("memory")
@@ -146,8 +146,6 @@ def stream_distinct_derived(
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     try:
         q.awaitTermination()
     finally:

@@ -121,8 +121,6 @@ def debug_run(
         input = spec.example_input
     saved = engine.config
     cfg = copy.copy(saved)
-    cfg.scout = True
-    cfg.follow_children = False
     # pagination rides the 'next' emission kind; --no-pagination is a
     # one-wave run (cli.py:359-370 prints a notice and stops)
     if not follow_pagination:
@@ -132,7 +130,8 @@ def debug_run(
     engine.config = cfg
     try:
         res = engine.crawl(
-            [{"page_cls": page_cls, "input": input, "url": url}]
+            [{"page_cls": page_cls, "input": input, "url": url}],
+            _scout=True,
         )
         import json as _json
 

@@ -336,9 +336,8 @@ def test_dfs_order_matches_document_order(spark, web, store):
 
 def test_driver_caps_derive_from_heap(spark, store):
     """The driver-python-structure caps scale with the provisioned
-    driver heap when left at their None defaults (the round-4
-    'literals don't scale' amber): 5% of heap at the structure's
-    bytes/key, never below the 10k floor; explicit ints still win."""
+    driver heap (the round-4 'literals don't scale' amber): 5% of heap
+    at the structure's bytes/key, never below the 10k floor."""
     from spatula_spark.plans.engine import _parse_jvm_mem
 
     eng = CrawlEngine(spark, media_registry(), page_store=store,
@@ -346,12 +345,29 @@ def test_driver_caps_derive_from_heap(spark, store):
     heap = _parse_jvm_mem(spark.conf.get("spark.driver.memory"))
     assert eng._driver_store_keys_max == max(10_000, int(heap * 0.05) // 80)
     assert eng._driver_seen_max == max(10_000, int(heap * 0.05) // 130)
-    pinned = CrawlEngine(
-        spark, media_registry(), page_store=store,
-        config=CrawlConfig(driver_store_keys_max=123,
-                           driver_seen_max=456))
-    assert pinned._driver_store_keys_max == 123
-    assert pinned._driver_seen_max == 456
+
+
+def test_driver_local_crawl_restores_session_conf(
+        spark, web, store, monkeypatch):
+    """With no politeness and no robots the small waves run
+    driver-local, turning AQE off around their collect; the session's
+    AQE and shuffle-partition confs read the same after the crawl."""
+    from spatula_spark.plans import engine as engine_mod
+    from spatula_spark.session import scoped_conf
+
+    toggles = []
+
+    def spy(s, conf):
+        toggles.append(dict(conf))
+        return scoped_conf(s, conf)
+
+    monkeypatch.setattr(engine_mod, "scoped_conf", spy)
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    before = {k: spark.conf.get(k) for k in keys}
+    CrawlEngine(spark, media_registry(), page_store=store,
+                config=CrawlConfig()).crawl(web.seeds())
+    assert {"spark.sql.adaptive.enabled": "false"} in toggles
+    assert {k: spark.conf.get(k) for k in keys} == before
 
 
 def test_checkpoint_resume_identical(spark, web, store, tmp_path):

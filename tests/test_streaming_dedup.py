@@ -4,6 +4,8 @@ equivalence and the watermark state-eviction trade."""
 import datetime as dt
 import os
 
+import pytest
+
 from spatula_spark.streaming.dedup import stream_distinct_keys
 
 
@@ -73,3 +75,25 @@ def test_state_evicted_after_watermark(spark, tmp_path):
     clicks = [r for r in rows if r["user_id"] == 1]
     assert len(clicks) == 2  # once per side of the eviction
     assert len([r for r in rows if r["user_id"] == 9]) == 1
+
+
+class _StubConf:
+    def get(self, key, default=None):
+        assert key == "spark.sql.shuffle.partitions"
+        return "32"
+
+
+class _StubSpark:
+    conf = _StubConf()
+
+
+@pytest.mark.parametrize("path", [
+    "s3://bucket/events/", "hdfs://nn/events", "/nonexistent/events_dir",
+])
+def test_state_partitions_unknown_size_keeps_session_width(path):
+    """A path the local walk cannot size (remote URI, missing dir)
+    walks as 0 bytes; that is an unknown size, not a tiny one, so the
+    stream keeps the session's full state-partition width."""
+    from spatula_spark.streaming.dedup import _state_partitions
+
+    assert _state_partitions(_StubSpark(), path) == 32

@@ -62,11 +62,6 @@ def _state_partitions(spark: SparkSession, path: str) -> int:
     return max(min(n, total // (32 << 20) + 1), min(8, n))
 
 
-def _state_conf(spark: SparkSession, path: str) -> dict[str, str]:
-    n = _state_partitions(spark, path)
-    return {"spark.sql.shuffle.partitions": str(n)}
-
-
 def stream_distinct_keys(
     spark: SparkSession,
     events_path: str,
@@ -95,7 +90,8 @@ def stream_distinct_keys(
     # the query snapshots shuffle.partitions at start() as its state
     # partition count; derive it from input size, restore the session
     # conf immediately after
-    with scoped_conf(spark, _state_conf(spark, src)):
+    state_parts = str(_state_partitions(spark, src))
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": state_parts}):
         q = (
             stream.writeStream.outputMode("append")
             .format("memory")
@@ -137,7 +133,8 @@ def stream_distinct_derived(
     )
     deduped = derive(stream).dropDuplicatesWithinWatermark(list(out_cols))
     # input-sized state partitioning (see _state_partitions)
-    with scoped_conf(spark, _state_conf(spark, src)):
+    state_parts = str(_state_partitions(spark, src))
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": state_parts}):
         q = (
             deduped.select(*out_cols)
             .writeStream.format("memory")
